@@ -113,9 +113,9 @@ class Corpus:
 class QueryMix:
     """Seeded keyword queries over one vocabulary and base corpus.
 
-    A query has 1-5 positive terms, each from the head, mid or tail
-    rank stratum (Zipf-weighted inside the stratum); about one query
-    in five adds a negative term from the head or mid stratum.
+    A query's positive terms each come from the head, mid or tail rank
+    stratum (Zipf-weighted inside the stratum); a negative term comes
+    from the head or mid stratum.
     """
 
     def __init__(self, vocab: Vocabulary, df: np.ndarray, seed: int) -> None:
@@ -136,20 +136,37 @@ class QueryMix:
         ranks, pr, _ = strata[k]
         return int(self.rng.choice(ranks, p=pr))
 
-    def query(self) -> tuple[list[str], list[str]]:
-        n_pos = int(self.rng.integers(1, 6))
+    def query(self, n_pos: int, negative: bool) -> tuple[list[str], list[str]]:
+        """One query of ``n_pos`` positive terms, plus one negative
+        term if ``negative``, as (positive words, negative words)."""
         pos: list[int] = []
         while len(pos) < n_pos:
             r = self._term(self.strata)
             if r not in pos:
                 pos.append(r)
         neg: list[int] = []
-        if self.rng.random() < 0.2:
-            while not neg:
-                r = self._term(self.strata[:2])
-                if r not in pos:
-                    neg.append(r)
+        while negative and not neg:
+            r = self._term(self.strata[:2])
+            if r not in pos:
+                neg.append(r)
         return [self.words[r] for r in pos], [self.words[r] for r in neg]
+
+    def pool(self, size: int) -> list[tuple[tuple[str, ...], tuple[str, ...]]]:
+        """``size`` distinct queries whose shapes do not depend on the
+        seed: the first is the two-head-term query; the others cycle
+        through 1-5 positive terms, and one in five (at seeded
+        places) adds a negative term. Only the words are drawn."""
+        n = size - 1
+        neg_at = set(self.rng.choice(n, size=n // 5, replace=False).tolist())
+        pool = [(tuple(self.head_pair()), ())]
+        for i in range(n):
+            while True:
+                pos, neg = self.query(n_pos=1 + i % 5, negative=i in neg_at)
+                q = (tuple(pos), tuple(neg))
+                if q not in pool:
+                    break
+            pool.append(q)
+        return pool
 
     def head_pair(self) -> list[str]:
         """The two most frequent query-eligible words (the

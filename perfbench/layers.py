@@ -42,6 +42,11 @@ def span_counts(span: dict) -> dict:
     return {k: span[k] for k in ("jobs", "tasks", "failed_tasks")}
 
 
+def span_seconds(span: dict) -> float:
+    """The call's own time: a span's bounds exclude its bookkeeping."""
+    return span["end"] - span["start"]
+
+
 def _median_of(recs: list[dict], key: str) -> float:
     return statistics.median(r[key] for r in recs)
 
@@ -105,9 +110,9 @@ def count_decoded():
         codec.decode_blocks = orig
 
 
-def wand_decomposition(bench, eng, index, q) -> float:
+def wand_decomposition(bench, eng, index, q):
     """Split one query over ``wand_topk`` into plan, scan, dispatch,
-    kernel and the full top-k. Returns ``wand.topk_s``."""
+    kernel and the full top-k. Returns the full top-k as a call."""
     from pyspark.sql import functions as F
 
     from top2vec_spark.operators.bm25 import resolve_query_terms
@@ -173,24 +178,28 @@ def wand_decomposition(bench, eng, index, q) -> float:
     bench.layer("wand.blocks_decoded", decoded[0], "count")
     bench.layer("wand.decode_ratio", decoded[0] / max(len(pdf), 1), "ratio")
     bench.note("wand.kernel_share_of_topk", kernel_s / topk_s, "ratio")
-    return topk_s
+    return lambda: plan().collect()
 
 
 # -- api -----------------------------------------------------------------------
-def api_probes(bench, eng, pool, oracle: Oracle, topk_s: float) -> None:
+def api_probes(bench, eng, pool, oracle: Oracle, topk) -> None:
     """The three facade ops on the two-head-term query (pool[0]):
-    facade cost over ``wand_topk``, fetch-back cost, jobs per op."""
+    facade cost over the same query's ``wand_topk`` (``topk``), run
+    alternately with it; fetch-back cost; jobs per op. Then the
+    tracing overhead: the same ``kw`` with tracing off."""
     head = pool[0]
-    runs = {"kw": [], "kw_docs": [], "kw_batch": []}
+    runs = {"topk": [], "kw": [], "kw_docs": [], "kw_batch": []}
     picks = [i % len(pool) for i in range(32)]
-    for kind, reps, fn in (
-        ("kw", REPS, lambda: kw(eng, head)),
-        ("kw_docs", REPS, lambda: kw(eng, head, return_documents=True)),
-        ("kw_batch", REPS, lambda: kw_batch(eng, pool, picks)),
+    for _ in range(REPS):
+        runs["topk"].append(bench.run_op("probe.topk", topk))
+        runs["kw"].append(bench.run_op("probe.kw", lambda: kw(eng, head)))
+    for kind, fn in (
+        ("kw_docs", lambda: kw(eng, head, return_documents=True)),
+        ("kw_batch", lambda: kw_batch(eng, pool, picks)),
     ):
-        for _ in range(reps):
+        for _ in range(REPS):
             runs[kind].append(bench.run_op(f"probe.{kind}", fn))
-    for op, rows, _ in runs["kw"] + runs["kw_docs"]:
+    for op, rows, _ in runs["topk"] + runs["kw"] + runs["kw_docs"]:
         if rows is not None:
             bench.check(op, hits(rows) == oracle(head), "probe kw != brute force")
     for op, rows, _ in runs["kw_batch"]:
@@ -199,17 +208,30 @@ def api_probes(bench, eng, pool, oracle: Oracle, topk_s: float) -> None:
             bench.check(op, ok, "probe kw_batch != brute force")
 
     def med(kind):
-        return statistics.median(dt for _, _, dt in runs[kind])
+        return statistics.median(map(span_seconds, bench.tracer.of(f"probe.{kind}")))
 
     def jobs(kind):
         return statistics.median(s["jobs"] for s in bench.tracer.of(f"probe.{kind}"))
 
-    bench.layer("api.overhead_s", med("kw") - topk_s, "s", REPS)
+    bench.layer("api.overhead_s", med("kw") - med("topk"), "s", REPS)
     bench.layer("api.project_s", med("kw_docs") - med("kw"), "s", REPS)
     bench.layer("api.kw_docs_p50_s", med("kw_docs"), "s", REPS)
     bench.layer("api.jobs_per_kw", jobs("kw"), "count", REPS)
     bench.layer("api.jobs_per_kw_docs", jobs("kw_docs"), "count", REPS)
     bench.layer("api.jobs_per_batch", jobs("kw_batch"), "count", REPS)
+
+    # traced minus untraced wall time of one kw, alternating the two
+    walls = {True: [], False: []}
+    for _ in range(REPS):
+        for traced in (True, False):
+            bench.tracer.enabled = traced
+            op, rows, dt = bench.run_op("probe.kw_overhead", lambda: kw(eng, head))
+            walls[traced].append(dt)
+            if rows is not None:
+                bench.check(op, hits(rows) == oracle(head), "probe kw != brute force")
+    bench.tracer.enabled = True
+    overhead = statistics.median(walls[True]) - statistics.median(walls[False])
+    bench.layer("trace.overhead_s", overhead, "s", REPS)
 
 
 # -- operators.codec -----------------------------------------------------------
@@ -270,8 +292,8 @@ def lifecycle(bench, eng, index_path: str, vocab, pool, n_base: int) -> None:
     rng = np.random.default_rng([bench.seed, 5])
     first, after = [], []
 
-    def queries(e, q, deleted=frozenset(), cache_tokens=False):
-        oracle = Oracle(e, deleted, cache_tokens)
+    def queries(e, q, deleted=frozenset(), cache=False):
+        oracle = Oracle(e, deleted, cache)
         for i in range(2):
             op, rows, dt = bench.run_op("lifecycle.kw", lambda: kw(e, q))
             (after if i else first).append(dt)
@@ -279,7 +301,7 @@ def lifecycle(bench, eng, index_path: str, vocab, pool, n_base: int) -> None:
                 bench.check(op, hits(rows) == oracle(q), "kw after write != brute force")
 
     _, eng1, append_s = bench.run_op("lifecycle.append", lambda: eng.add_documents(new_docs))
-    queries(eng1, pool[1], cache_tokens=True)  # the delete check reuses them
+    queries(eng1, pool[1], cache=True)  # the delete check reuses them
     dels = sorted(int(i) for i in rng.choice(n_base, max(1, n_base // 100), replace=False))
     _, _, delete_s = bench.run_op("lifecycle.delete", lambda: eng1.delete_documents(dels))
     queries(eng1, pool[2], dels)
@@ -313,11 +335,10 @@ def common_probes(bench, eng, index, corpus, vocab, pool, oracle=None) -> None:
     """Every per-layer probe that needs a facade engine over a built
     index. Order matters: the lifecycle mutates the index last."""
     oracle = oracle or Oracle(eng)
+    oracle.prefetch(pool, bench.nproc)
     job_floor(bench)
-    topk_s = wand_decomposition(bench, eng, index, pool[0])
-    api_probes(bench, eng, pool, oracle, topk_s)
+    topk = wand_decomposition(bench, eng, index, pool[0])
+    api_probes(bench, eng, pool, oracle, topk)
     vmap = eng.vocab_map
     codec_probes(bench, index, [vmap[w][0] for w in pool[0][0]])
     lifecycle(bench, eng, index.path, vocab, pool, len(corpus))
-    spans = bench.tracer.spans
-    bench.layer("trace.overhead_s", bench.tracer.bookkeeping_s / max(len(spans), 1), "s", len(spans))

@@ -3,6 +3,8 @@ the brute-force oracle their results are checked against."""
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 K = 10  # top-k of every query
 
 Query = tuple[tuple[str, ...], tuple[str, ...]]  # (positive, negative) terms
@@ -16,10 +18,10 @@ def corpus_frame(bench, corpus, name: str):
     return bench.spark.read.parquet(path).select("doc_id", "text")
 
 
-def kw(eng, q: Query, return_documents: bool = False, use_index=None) -> list:
+def kw(eng, q: Query, return_documents: bool = False, k: int = K, use_index=None) -> list:
     return eng.search_documents_by_keywords(
         list(q[0]),
-        K,
+        k,
         keywords_neg=list(q[1]),
         return_documents=return_documents,
         use_index=use_index,
@@ -46,26 +48,28 @@ class Oracle:
     ``deleted`` ids are dropped from a deeper result before cutting
     it to k; corpus statistics are the same stale ones on both paths.
 
-    With ``cache_tokens`` the engine's token table is cached first:
-    every brute-force query re-reads it, and tokenizing the corpus
-    again per query would dominate a check of many queries."""
+    With ``cache`` the engine's token and doc-stats tables are cached
+    first: every brute-force query re-reads them, and tokenizing the
+    corpus again per query would dominate a check of many queries."""
 
-    def __init__(self, eng, deleted=frozenset(), cache_tokens: bool = True) -> None:
+    def __init__(self, eng, deleted=frozenset(), cache: bool = True) -> None:
         self.eng = eng
         self.deleted = frozenset(deleted)
         self.memo: dict[Query, list] = {}
-        if cache_tokens:
+        if cache:
             eng.tokens = eng.tokens.cache()
+            eng.doc_stats = eng.doc_stats.cache()
 
     def __call__(self, q: Query) -> list[tuple[int, float]]:
         if q not in self.memo:
-            rows = self.eng.search_documents_by_keywords(
-                list(q[0]),
-                K + len(self.deleted),
-                keywords_neg=list(q[1]),
-                return_documents=False,
-                use_index=False,
-            ).collect()
+            rows = kw(self.eng, q, k=K + len(self.deleted), use_index=False)
             live = [h for h in hits(rows) if h[0] not in self.deleted]
             self.memo[q] = live[:K]
         return self.memo[q]
+
+    def prefetch(self, queries, workers: int) -> None:
+        """Answer ``queries`` from ``workers`` threads. Each
+        brute-force query is a few small Spark jobs, so concurrent
+        ones keep the cores busier than one after another."""
+        with ThreadPoolExecutor(workers) as ex:
+            list(ex.map(self, dict.fromkeys(queries)))

@@ -126,9 +126,12 @@ def _prepare_env(work: str) -> None:
 
 
 def _start_spark(work: str, nproc: int):
-    """``local[nproc]`` with the engine's session defaults. The JVM
+    """``local[nproc]`` with the engine's session defaults, except
+    that Spark scratch stays inside the run's directory. The JVM
     compiles with C1 only: JIT warm-up then ends within set-up and
-    does not shift latencies part-way through a run."""
+    does not shift latencies part-way through a run. C1 alone gets a
+    48 MB code cache, which a run fills; then the JVM stops compiling,
+    so the cache gets the size the default tiered compiler has."""
     from top2vec_spark.session import get_spark
 
     return get_spark(
@@ -138,7 +141,8 @@ def _start_spark(work: str, nproc: int):
             "spark.local.dir": f"{work}/spark-local",
             "spark.sql.warehouse.dir": f"{work}/warehouse",
             "spark.driver.extraJavaOptions": (
-                f"-XX:TieredStopAtLevel=1 -Djava.io.tmpdir={work}/tmp "
+                "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m "
+                f"-Djava.io.tmpdir={work}/tmp "
                 f"-Dderby.system.home={work}/tmp"
             ),
             "spark.ui.showConsoleProgress": "false",

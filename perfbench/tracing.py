@@ -5,8 +5,10 @@ op id, plus the Spark jobs, stages, tasks and failed tasks that ran
 inside it, read from ``SparkContext.statusTracker()``. Spans stay in
 memory; ``dump`` writes them out once the run has ended.
 
-With tracing off, ``span`` only yields, so untraced runs pay for one
-generator per op and nothing else.
+A span's ``start`` and ``end`` exclude that bookkeeping, so its
+duration is the call's own time. With tracing off, ``span`` only
+yields, so untraced runs pay for one generator per op and nothing
+else.
 """
 
 from __future__ import annotations
@@ -23,8 +25,6 @@ class Tracer:
         self._sc = spark.sparkContext
         self._stack: list[dict] = []
         self._next_op = 0
-        # seconds spent reading counters (the tracing overhead)
-        self.bookkeeping_s = 0.0
 
     # -- status tracker ------------------------------------------------------
     def _drain_listener(self) -> None:
@@ -65,13 +65,11 @@ class Tracer:
 
     @contextmanager
     def span(self, name: str, op: int | None = None):
-        """Record one call into a layer. Yields the span dict (empty
-        when tracing is off) so callers can attach their own counts."""
+        """Record one call into a layer."""
         if not self.enabled:
-            yield {}
+            yield
             return
         parent = self._stack[-1] if self._stack else None
-        t0 = time.perf_counter()
         first_job = self._max_job()
         s = {
             "name": name,
@@ -80,16 +78,14 @@ class Tracer:
             "id": len(self.spans) + len(self._stack),
         }
         self._stack.append(s)
-        self.bookkeeping_s += time.perf_counter() - t0
         s["start"] = time.perf_counter()
         try:
-            yield s
+            yield
         finally:
             s["end"] = time.perf_counter()
             self._stack.pop()
             s.update(self._counts_since(first_job))
             self.spans.append(s)
-            self.bookkeeping_s += time.perf_counter() - s["end"]
 
     def of(self, name: str) -> list[dict]:
         return [s for s in self.spans if s["name"] == name]

@@ -18,13 +18,14 @@ import numpy as np
 import indexfiles
 import layers
 from gen import Corpus, QueryMix, Vocabulary
-from ops import Oracle, Query, corpus_frame, hits, kw, kw_batch
+from ops import Oracle, corpus_frame, hits, kw, kw_batch
 
-BUILD_DOCS = 4_000  # corpus of each timed build
+BUILD_DOCS = 1_000  # corpus of each timed build
+MIN_BUILDS = 5  # timed builds per untraced run, even past --seconds
 WARMUP_DOCS = 500  # corpus of build's untimed warm-up build
-SERVE_DOCS = 2_000  # served corpus; its cold set-up build dominates a run
-POOL = 4  # distinct keyword queries per serve run
-BATCH = 32  # queries per kw_batch op
+SERVE_DOCS = 1_000  # served corpus; its cold set-up build dominates a run
+POOL = 16  # distinct keyword queries per serve run
+BATCH = 32  # queries per kw_batch op: every pool query twice
 # serve's closed loop repeats this op cycle
 CYCLE = ("kw", "kw_docs", "kw", "kw", "kw_batch", "kw", "kw", "kw")
 
@@ -63,8 +64,9 @@ def run_build(bench) -> None:
 
     recs: list[dict] = []
     start = time.perf_counter()
-    # a traced run measures layers, not the end-to-end median: one build
-    min_builds = 1 if bench.traced else 2
+    # a traced run measures layers, not the end-to-end median: it
+    # takes its stage metrics from the builds of one window
+    min_builds = 1 if bench.traced else MIN_BUILDS
     while len(recs) < min_builds or time.perf_counter() - start < bench.seconds:
         path = f"{bench.work}/idx_{len(recs)}"
         recs.append(timed_build(bench, docs, corpus, path, "plans.build"))
@@ -75,38 +77,26 @@ def run_build(bench) -> None:
     ratio = statistics.median(r["index_bytes"] for r in recs) / corpus.text_bytes
     bench.e2e("setup_s", bench.setup_s, "s")
     bench.e2e("op_p50_s", statistics.median(secs), "s", len(secs))
-    # docs indexed per second of build time
-    bench.e2e("throughput_per_s", len(corpus) * len(secs) / sum(secs), "1/s", len(secs))
+    # docs indexed per second of the median build
+    bench.e2e("throughput_per_s", len(corpus) / statistics.median(secs), "1/s", len(secs))
     bench.e2e("index_bytes_per_input_byte", ratio, "ratio", len(recs))
-    bench.note("build_docs_per_s", len(corpus) / statistics.median(secs), "docs/s", len(secs))
 
     if bench.traced:
         layers.build_stage_metrics(bench, recs)
         # the facade adopts the last timed build: build_index resumes
         # every stage from its markers (same docs, same parameters)
         eng, index, _ = layers.facade_index(bench, docs, f"{bench.work}/idx_{len(recs) - 1}")
-        pool = query_pool(QueryMix(vocab, corpus.doc_freq(), bench.seed))
+        pool = QueryMix(vocab, corpus.doc_freq(), bench.seed).pool(POOL)
         layers.common_probes(bench, eng, index, corpus, vocab, pool)
 
 
 # -- serve -------------------------------------------------------------------
-def query_pool(qm: QueryMix) -> list[Query]:
-    """POOL distinct queries; the first is the two-head-term query."""
-    pool = [(tuple(qm.head_pair()), ())]
-    while len(pool) < POOL:
-        pos, neg = qm.query()
-        q = (tuple(pos), tuple(neg))
-        if q not in pool:
-            pool.append(q)
-    return pool
-
-
 def run_serve(bench) -> None:
     vocab = Vocabulary(bench.seed)
     corpus = Corpus(vocab, SERVE_DOCS, bench.seed)
     docs = corpus_frame(bench, corpus, "corpus")
-    qm = QueryMix(vocab, corpus.doc_freq(), bench.seed)
-    pool = query_pool(qm)
+    pool = QueryMix(vocab, corpus.doc_freq(), bench.seed).pool(POOL)
+    batch = list(range(POOL)) * (BATCH // POOL)
 
     path = f"{bench.work}/serve_idx"
     wall0 = time.time()
@@ -127,7 +117,7 @@ def run_serve(bench) -> None:
     t = time.perf_counter()
     kw(eng, pool[0])
     kw(eng, pool[0], return_documents=True)
-    kw_batch(eng, pool, list(range(POOL)))
+    kw_batch(eng, pool, batch)
     bench.note("setup.warmup_s", time.perf_counter() - t, "s")
     bench.setup_done()
 
@@ -138,8 +128,8 @@ def run_serve(bench) -> None:
     while not seen or (not bench.traced and time.perf_counter() - start < bench.seconds):
         for kind in CYCLE:
             if kind == "kw_batch":
-                picks = [int(j) for j in rng.integers(0, POOL, BATCH)]
-                op, rows, dt = bench.run_op("api.kw_batch", lambda: kw_batch(eng, pool, picks))
+                picks = batch
+                op, rows, dt = bench.run_op("api.kw_batch", lambda: kw_batch(eng, pool, batch))
             else:
                 picks = int(rng.integers(0, POOL))
                 docs_too = kind == "kw_docs"
@@ -155,6 +145,7 @@ def run_serve(bench) -> None:
     # the brute-force path (rank and float64 score identical)
     t = time.perf_counter()
     oracle = Oracle(eng)
+    oracle.prefetch(pool, bench.nproc)
     for op, kind, picks, rows in seen:
         if rows is None:
             continue
