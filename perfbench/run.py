@@ -151,12 +151,19 @@ def _start_spark(work: str, nproc: int):
 
 
 def _stop_spark(spark) -> None:
-    """Stop the session, then end the JVM and wait for it."""
-    gateway = spark.sparkContext._gateway
-    spark.stop()
+    """Stop the session, if one started, then end the JVM, if one was
+    launched, and wait for it. A run stopped by a signal may have a JVM
+    but no session, or a py4j connection left mid-call, so the JVM is
+    ended through its process whatever the session calls raise."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
     proc = getattr(gateway, "proc", None)
     try:
-        gateway.shutdown()
+        if spark is not None:
+            spark.stop()
+        if gateway is not None:
+            gateway.shutdown()
     finally:
         if proc is not None:
             # the gateway JVM exits when its stdin closes
@@ -215,9 +222,10 @@ def main(argv=None) -> int:
             )
         result = _report(bench, bench.traced)
     finally:
-        if spark is not None:
+        try:
             _stop_spark(spark)
-        shutil.rmtree(work, ignore_errors=True)
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
     print(json.dumps(result), flush=True)
     return 0
 
