@@ -6,8 +6,9 @@ Pipeline (all DataFrame ops + one Arrow-grouped encoder):
       ⋈ vocab(term -> term_id, df)      (broadcast-able dimension)
       ⋈ doc_stats(doc_id -> dl)
       withColumn shard = doc_id // docs_per_shard     <- THE SALT
-      groupBy(term_id, shard).applyInPandas(encode)   <- salted
-                                   repartition-by-term (north rule)
+      repartition(term_id, shard)                     <- salted
+        .sortWithinPartitions          repartition-by-term (north rule)
+        .mapInPandas(encode)   every run of a partition in one pass
       -> postings blocks, written partitionBy(bucket(term_id))
 
 Skew design: a head term (Zipf "the") has rows in EVERY doc-shard, so
@@ -33,6 +34,7 @@ engine's scale path (SURVEY.md J5/K1).
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
 import numpy as np
@@ -42,6 +44,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from top2vec_spark.config import BM25Config, POSTING_BLOCK_SIZE
+from top2vec_spark.operators.codec import (
+    _varint_nbytes,
+    encode_gamma_many,
+    encode_varint,
+)
 from top2vec_spark.operators.corpus_stats import CorpusGlobals
 
 SKIP_EVERY = 16
@@ -84,15 +91,79 @@ POSTINGS_SCHEMA = T.StructType(
 )
 
 
-def _varint_offsets(values: np.ndarray) -> np.ndarray:
-    """Byte offset of each value within the varint-encoded stream."""
-    v = values.astype(np.uint64)
-    nbytes = np.ones(v.shape, dtype=np.int64)
-    tmp = v >> np.uint64(7)
-    while (tmp > 0).any():
-        nbytes[tmp > 0] += 1
-        tmp >>= np.uint64(7)
-    return np.concatenate(([0], np.cumsum(nbytes)[:-1]))
+def _encode_blocks(
+    tid: np.ndarray,
+    shard: np.ndarray,
+    doc: np.ndarray,
+    tf: np.ndarray,
+    contrib: np.ndarray,
+    dl: np.ndarray,
+    block_size: int,
+) -> pd.DataFrame:
+    """Encode postings rows into block rows (POSTINGS_SCHEMA columns),
+    every (term_id, shard) run of the input at once.
+
+    The rows hold each run contiguously with its doc_ids ascending; the
+    runs themselves may come in any order (term-major or shard-major).
+    Run and block boundaries are vectorized masks, and the whole input
+    goes through ONE varint encode, ONE varint length pass and ONE
+    gamma encode; each block's bytes are then sliced out by offset.
+    Codec calls per run would cost ~0.6 ms each in numpy call
+    overhead, and a partition holds thousands of mostly tiny runs.
+    Bytes are identical to encoding each block on its own (varint
+    streams self-terminate, gamma streams pad to a byte per block)."""
+    n = doc.size
+    new_run = np.ones(n, dtype=bool)
+    new_run[1:] = (tid[1:] != tid[:-1]) | (shard[1:] != shard[:-1])
+    run_starts = np.flatnonzero(new_run)
+    pos = np.arange(n) - np.repeat(run_starts, np.diff(np.append(run_starts, n)))
+    in_block = pos % block_size
+    starts = np.flatnonzero(in_block == 0)
+    ends = np.append(starts[1:], n)
+    counts = ends - starts
+
+    # doc_id deltas restart at every block: its first doc_id is absolute
+    deltas = np.empty(n, dtype=np.int64)
+    deltas[0] = doc[0]
+    deltas[1:] = np.diff(doc)
+    deltas[starts] = doc[starts]
+    deltas = deltas.astype(np.uint64)
+    blob = encode_varint(deltas)
+    byte_end = np.cumsum(_varint_nbytes(deltas))
+    byte_start = np.append(0, byte_end[:-1])
+    doc_bytes = [
+        blob[lo:hi]
+        for lo, hi in zip(byte_start[starts].tolist(), byte_end[ends - 1].tolist())
+    ]
+    tf_bytes = encode_gamma_many(tf.astype(np.uint64), counts)
+
+    # a skip every SKIP_EVERY entries: (doc_id, byte offset in the block)
+    skip = np.flatnonzero(in_block % SKIP_EVERY == 0)
+    block_of = np.cumsum(in_block == 0) - 1
+    skip_off = byte_start[skip] - byte_start[starts][block_of[skip]]
+    entries = [
+        {"doc_id": d, "offset": o}
+        for d, o in zip(doc[skip].tolist(), skip_off.tolist())
+    ]
+    skip_end = np.cumsum((counts + SKIP_EVERY - 1) // SKIP_EVERY).tolist()
+    skips = [entries[lo:hi] for lo, hi in zip([0] + skip_end[:-1], skip_end)]
+
+    return pd.DataFrame(
+        {
+            "term_id": tid[starts],
+            "shard": shard[starts],
+            "block_id": pos[starts] // block_size,
+            "n": counts,
+            "doc_ids": doc_bytes,
+            "tfs": tf_bytes,
+            "skips": skips,
+            "first_doc_id": doc[starts],
+            "last_doc_id": doc[ends - 1],
+            "block_max_tf": np.maximum.reduceat(tf, starts),
+            "block_max_score": np.maximum.reduceat(contrib, starts),
+            "block_min_dl": np.minimum.reduceat(dl, starts).astype(np.int64),
+        }
+    )
 
 
 def encode_sorted_run(
@@ -105,68 +176,72 @@ def encode_sorted_run(
     block_size: int,
     out: list,
 ) -> None:
-    """Append encoded block rows for ONE (term_id, shard) run whose
-    doc_ids are already sorted ascending.
+    """Append the block rows (tuples in POSTINGS_SCHEMA column order)
+    of ONE (term_id, shard) run whose doc_ids are sorted ascending;
+    ``contrib`` is each posting's BM25 contribution. A per-run view of
+    the partition encoder's batched core, for callers that hold single
+    runs (codec round-trip probes, reference loops in tests)."""
+    n = len(doc_ids)
+    blocks = _encode_blocks(
+        np.full(n, term_id, dtype=np.int64),
+        np.full(n, shard, dtype=np.int64),
+        np.asarray(doc_ids, dtype=np.int64),
+        np.asarray(tfs, dtype=np.int64),
+        np.asarray(contrib, dtype=np.float64),
+        np.asarray(dls),
+        block_size,
+    )
+    out.extend(blocks.itertuples(index=False, name=None))
 
-    ALL of the run's blocks encode in one batched codec pass
-    (encode_varint_many / encode_gamma_many — byte-identical to
-    per-block encodes): head-term runs hold thousands of blocks, and
-    the per-block encode_varint/encode_gamma fixed cost was the
-    postings stage's dominant term, mirroring the decode-side finding
-    on the query path."""
-    from top2vec_spark.operators.codec import (
-        encode_gamma_many,
-        encode_varint_many,
+
+def _encode_scored(
+    tid: np.ndarray,
+    shard: np.ndarray,
+    doc: np.ndarray,
+    tf: np.ndarray,
+    dl: np.ndarray,
+    df_map,
+    block_size: int,
+    k1: float,
+    b: float,
+    n_docs: int,
+    avgdl: float,
+) -> Iterator[pd.DataFrame]:
+    """Score and encode one partition's sorted postings rows (int64
+    term_id/shard/doc_id/tf, float64 dl); ``df_map[term_id]`` gives a
+    term's df (a dict, or an array indexed by term_id). Yields the
+    partition's block rows as one frame, or nothing when it is empty.
+
+    idf is ``math.log`` once per distinct term, not ``np.log`` per row:
+    the two can differ by an ulp, and the stored block maxima must
+    exactly dominate the WAND kernel's math.log-based scores."""
+    if tid.size == 0:
+        return
+    terms, term_of = np.unique(tid, return_inverse=True)
+    idf = np.array(
+        [
+            math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+            for df in (int(df_map[t]) for t in terms.tolist())
+        ]
+    )
+    tf_part = (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+    yield _encode_blocks(
+        tid, shard, doc, tf, idf[term_of] * tf_part, dl, block_size
     )
 
-    n = doc_ids.size
-    d = np.ascontiguousarray(doc_ids, dtype=np.int64)
-    t = np.ascontiguousarray(tfs, dtype=np.int64)
-    block_starts = np.arange(0, n, block_size, dtype=np.int64)
-    n_blocks = block_starts.size
-    counts = np.minimum(block_starts + block_size, n) - block_starts
-    # deltas with a reset at every block start (first value absolute)
-    deltas = np.empty(n, dtype=np.uint64)
-    deltas[0] = np.uint64(d[0])
-    if n > 1:
-        deltas[1:] = np.diff(d).astype(np.uint64)
-    deltas[block_starts] = d[block_starts].astype(np.uint64)
-    doc_bytes_list = encode_varint_many(deltas, counts)
-    tf_bytes_list = encode_gamma_many(t.astype(np.uint64), counts)
-    max_tf = np.maximum.reduceat(t, block_starts)
-    max_c = np.maximum.reduceat(contrib, block_starts)
-    min_dl = np.minimum.reduceat(np.ascontiguousarray(dls), block_starts)
-    lasts = np.minimum(block_starts + block_size, n) - 1
-    from top2vec_spark.operators.codec import _varint_nbytes
 
-    nbytes_all = _varint_nbytes(deltas)
-    for blk_i in range(n_blocks):
-        lo = int(block_starts[blk_i])
-        hi = int(lasts[blk_i]) + 1
-        offs = np.concatenate(([0], np.cumsum(nbytes_all[lo:hi])[:-1]))
-        skips = [
-            {"doc_id": int(d[lo + i]), "offset": int(offs[i])}
-            for i in range(0, hi - lo, SKIP_EVERY)
-        ]
-        out.append(
-            (
-                term_id,
-                shard,
-                blk_i,
-                hi - lo,
-                doc_bytes_list[blk_i],
-                tf_bytes_list[blk_i],
-                skips,
-                int(d[lo]),
-                int(d[hi - 1]),
-                int(max_tf[blk_i]),
-                float(max_c[blk_i]),
-                int(min_dl[blk_i]),
-            )
-        )
+def _concat(pdfs) -> pd.DataFrame | None:
+    """One frame from a partition's Arrow batches (a run may straddle
+    batches); None for a partition without rows."""
+    chunks = list(pdfs)
+    if not chunks:
+        return None
+    pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+    return pdf if len(pdf) else None
 
 
-_OUT_COLS = [f.name for f in POSTINGS_SCHEMA.fields]
+def _int64(pdf: pd.DataFrame, col: str) -> np.ndarray:
+    return pdf[col].to_numpy().astype(np.int64)
 
 
 def encode_partition(
@@ -179,67 +254,31 @@ def encode_partition(
     df_map=None,
 ):
     """mapInPandas kernel: one shuffle partition holds many complete
-    (term_id, shard) runs, pre-sorted by (term_id, shard, doc_id) via
-    sortWithinPartitions. Arrow batches are concatenated (a run may
-    straddle batches), group boundaries found vectorized, idf computed
-    once per term — NO per-group pandas DataFrame construction, which
-    dominates runtime when groups are small (head-term-salted groups
-    at fixture scale are tiny)."""
-    import math
-
-    chunks = list(pdfs)
-    if not chunks:
+    (term_id, shard) runs, sorted by (term_id, shard, doc_id) via
+    sortWithinPartitions, each row carrying its dl. df either arrives
+    as a broadcast ``df_map`` (term_id -> df) or, for a vocab over the
+    broadcast cap, shuffles as a ``df`` column. The partition's runs
+    encode in one batched pass (``_encode_blocks``)."""
+    pdf = _concat(pdfs)
+    if pdf is None:
         return
-    pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-    tid = pdf["term_id"].to_numpy().astype(np.int64)
-    shard = pdf["shard"].to_numpy().astype(np.int64)
-    doc = pdf["doc_id"].to_numpy().astype(np.int64)
-    tf = pdf["tf"].to_numpy().astype(np.int64)
-    # df either shuffles as a column (compat) or arrives as a
-    # broadcast dict term_id -> df (saves 8 bytes/row in the big
-    # repartition-by-term shuffle)
-    dfv = (
-        pdf["df"].to_numpy().astype(np.int64)
-        if df_map is None
-        else None
+    tid = _int64(pdf, "term_id")
+    if df_map is None:
+        terms, first = np.unique(tid, return_index=True)
+        df_map = dict(zip(terms.tolist(), _int64(pdf, "df")[first].tolist()))
+    yield from _encode_scored(
+        tid,
+        _int64(pdf, "shard"),
+        _int64(pdf, "doc_id"),
+        _int64(pdf, "tf"),
+        pdf["dl"].to_numpy().astype(np.float64),
+        df_map,
+        block_size,
+        k1,
+        b,
+        n_docs,
+        avgdl,
     )
-    dl = pdf["dl"].to_numpy().astype(np.float64)
-
-    # vectorized BM25 contribution for every row (idf via np.log is
-    # 1-ulp-risky vs math.log — recompute per-run idf with math.log
-    # below and scale, so stored block maxima exactly dominate the
-    # WAND kernel's math.log-based scores)
-    tf_part = (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-
-    # run boundaries where (term_id, shard) changes
-    change = np.flatnonzero((tid[1:] != tid[:-1]) | (shard[1:] != shard[:-1]))
-    starts = np.concatenate(([0], change + 1))
-    ends = np.concatenate((change + 1, [tid.size]))
-
-    out: list = []
-    idf_cache: dict[int, float] = {}
-    for s, e in zip(starts, ends):
-        t_id = int(tid[s])
-        idf = idf_cache.get(t_id)
-        if idf is None:
-            df_val = int(df_map[t_id]) if df_map is not None else int(dfv[s])
-            idf = math.log(1.0 + (n_docs - df_val + 0.5) / (df_val + 0.5))
-            idf_cache[t_id] = idf
-        encode_sorted_run(
-            t_id,
-            int(shard[s]),
-            doc[s:e],
-            tf[s:e],
-            idf * tf_part[s:e],
-            dl[s:e],
-            block_size,
-            out,
-        )
-        if len(out) >= 2000:
-            yield pd.DataFrame(out, columns=_OUT_COLS)
-            out = []
-    if out:
-        yield pd.DataFrame(out, columns=_OUT_COLS)
 
 
 def encode_partition_sidecar(
@@ -258,62 +297,47 @@ def encode_partition_sidecar(
     (shard, term_id, doc_id). Document lengths are side-read from the
     shard-partitioned doc_stats sidecar exactly like the WAND query
     kernel: shard-major ordering means one sidecar (a few MB) is live
-    at a time, loaded once per contiguous shard segment — bounded
-    memory at any scale, zero dl bytes through the big shuffle."""
-    import math
-
-    chunks = list(pdfs)
-    if not chunks:
+    at a time, read once per contiguous shard segment — bounded
+    memory at any scale, zero dl bytes through the big shuffle. The
+    partition's runs then encode in one batched pass."""
+    pdf = _concat(pdfs)
+    if pdf is None:
         return
-    pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-    tid = pdf["term_id"].to_numpy().astype(np.int64)
-    shard = pdf["shard"].to_numpy().astype(np.int64)
-    doc = pdf["doc_id"].to_numpy().astype(np.int64)
-    tf = pdf["tf"].to_numpy().astype(np.int64)
-
-    change = np.flatnonzero((shard[1:] != shard[:-1]) | (tid[1:] != tid[:-1]))
-    starts = np.concatenate(([0], change + 1))
-    ends = np.concatenate((change + 1, [tid.size]))
-
-    out: list = []
-    idf_cache: dict[int, float] = {}
-    cur_shard, s_ids, s_dl = None, None, None
-    for s, e in zip(starts, ends):
-        sh = int(shard[s])
-        if sh != cur_shard:
-            stats_pdf = pd.read_parquet(
-                f"{stats_path}/shard={sh}", columns=["doc_id", "dl"]
-            )
-            ids = stats_pdf["doc_id"].to_numpy().astype(np.int64)
-            order = np.argsort(ids)
-            s_ids = ids[order]
-            s_dl = stats_pdf["dl"].to_numpy().astype(np.float64)[order]
-            cur_shard = sh
-        t_id = int(tid[s])
-        idf = idf_cache.get(t_id)
-        if idf is None:
-            df_val = int(df_map[t_id])
-            idf = math.log(1.0 + (n_docs - df_val + 0.5) / (df_val + 0.5))
-            idf_cache[t_id] = idf
-        d = doc[s:e]
-        t = tf[s:e].astype(np.float64)
-        dl = s_dl[np.searchsorted(s_ids, d)]
-        tf_part = (t * (k1 + 1.0)) / (t + k1 * (1.0 - b + b * dl / avgdl))
-        encode_sorted_run(
-            t_id,
-            sh,
-            d,
-            tf[s:e],
-            idf * tf_part,
-            dl.astype(np.int64),
-            block_size,
-            out,
+    shard = _int64(pdf, "shard")
+    doc = _int64(pdf, "doc_id")
+    dl = np.empty(doc.size, dtype=np.float64)
+    bounds = np.flatnonzero(np.diff(shard)) + 1
+    for lo, hi in zip([0, *bounds.tolist()], [*bounds.tolist(), doc.size]):
+        stats = pd.read_parquet(
+            f"{stats_path}/shard={int(shard[lo])}", columns=["doc_id", "dl"]
         )
-        if len(out) >= 2000:
-            yield pd.DataFrame(out, columns=_OUT_COLS)
-            out = []
-    if out:
-        yield pd.DataFrame(out, columns=_OUT_COLS)
+        ids = stats["doc_id"].to_numpy().astype(np.int64)
+        order = np.argsort(ids)
+        s_dl = stats["dl"].to_numpy().astype(np.float64)[order]
+        dl[lo:hi] = s_dl[np.searchsorted(ids[order], doc[lo:hi])]
+    yield from _encode_scored(
+        _int64(pdf, "term_id"),
+        shard,
+        doc,
+        _int64(pdf, "tf"),
+        dl,
+        df_map,
+        block_size,
+        k1,
+        b,
+        n_docs,
+        avgdl,
+    )
+
+
+def broadcast_df_rows(vocab: DataFrame) -> list | None:
+    """The vocab's (term_id, df) rows when it has at most
+    DF_BROADCAST_CAP terms, else None. The count runs on the executors
+    (two small jobs), so an over-cap vocab never ships to the driver:
+    a limit(cap+1) collect would move 5M+1 rows just to learn that."""
+    if vocab.count() > DF_BROADCAST_CAP:
+        return None
+    return vocab.select("term_id", "df").collect()
 
 
 def build_postings_from_tf(
@@ -325,16 +349,18 @@ def build_postings_from_tf(
     block_size: int = POSTING_BLOCK_SIZE,
     stats_path: str | None = None,
     df_rows: list | None = None,
-) -> DataFrame:
-    """tf(doc_id, term, tf, dl) + vocab -> compressed postings
-    (unsaved). The only join is the vocab dimension (broadcast) and
-    the only shuffle is the repartition on (term_id, shard) — the
-    salted repartition-by-term.
+) -> tuple[DataFrame, int]:
+    """tf(doc_id, term, tf, dl) + vocab -> (compressed postings
+    (unsaved), their partition count). The only join is the vocab
+    dimension (broadcast) and the only shuffle is the repartition on
+    (term_id, shard) — the salted repartition-by-term. The partition
+    count is sized from the exact postings row count; writers size
+    their own shuffle by it.
 
-    ``df_rows``: optional pre-collected (term_id, df) rows (≤ cap+1,
-    same shape as the internal collect) — the index builder harvests
-    them inside its vocab stage thread so this planning-time job is
-    already paid when the postings stage starts.
+    ``df_rows``: the vocab's (term_id, df) rows when the caller
+    already holds them (``broadcast_df_rows``) — the index builder
+    harvests them inside its vocab stage thread so this planning-time
+    job is already paid when the postings stage starts.
 
     Shuffle-row slimming, in preference order:
     - ``stats_path`` given (the index build: doc_stats is already on
@@ -351,18 +377,8 @@ def build_postings_from_tf(
     k1, b, n_docs, avgdl = cfg.k1, cfg.b, globs.n_docs, globs.avgdl
 
     df_bc = None
-    # ONE job decides broadcastability AND fetches the map: collect up
-    # to CAP+1 (term_id, df) rows — len > CAP means the vocab is over
-    # the cap (fall back to the column path); the separate count() job
-    # this replaces cost a full extra scan per build
-    vrows = (
-        df_rows
-        if df_rows is not None
-        else vocab.select("term_id", "df")
-        .limit(DF_BROADCAST_CAP + 1)
-        .collect()
-    )
-    small_vocab = len(vrows) <= DF_BROADCAST_CAP
+    vrows = df_rows if df_rows is not None else broadcast_df_rows(vocab)
+    small_vocab = vrows is not None
     if small_vocab:
         df_map = {int(r["term_id"]): int(r["df"]) for r in vrows}
         df_bc = spark.sparkContext.broadcast(df_map)
@@ -416,7 +432,7 @@ def build_postings_from_tf(
                 pdfs, block_size, k1, b, n_docs, avgdl, df_bc.value, stats_path
             )
 
-        return shuffled.mapInPandas(encode_slim, POSTINGS_SCHEMA)
+        return shuffled.mapInPandas(encode_slim, POSTINGS_SCHEMA), n_encode_parts
 
     if small_vocab:
         enriched = (
@@ -450,7 +466,7 @@ def build_postings_from_tf(
             df_map=df_bc.value if df_bc is not None else None,
         )
 
-    return shuffled.mapInPandas(encode, POSTINGS_SCHEMA)
+    return shuffled.mapInPandas(encode, POSTINGS_SCHEMA), n_encode_parts
 
 
 def encode_shard_partition(
@@ -473,30 +489,21 @@ def encode_shard_partition(
     builders: the big raw (doc, term, tf) relation NEVER shuffles —
     only packed per-doc rows (once, by shard) and the compressed
     blocks (by term bucket, ~30x smaller than raw rows) move."""
-    import math
-
-    chunks = list(pdfs)
-    if not chunks:
+    pdf = _concat(pdfs)
+    if pdf is None:
         return
-    pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
 
     vm_terms = vocab_map["terms"]  # pd.Index of terms
     vm_ids = vocab_map["ids"]  # np.int64 array aligned with vm_terms
     vm_df = vocab_map["df"]  # np.int64 array aligned by term_id order
 
-    doc_ids_col = pdf["doc_id"].to_numpy().astype(np.int64)
-    dls_col = pdf["dl"].to_numpy().astype(np.int64)
+    doc_ids_col = _int64(pdf, "doc_id")
+    dls_col = _int64(pdf, "dl")
     lens = pdf["terms"].map(len).to_numpy().astype(np.int64)
     flat_terms = pd.Index(
         np.concatenate([np.asarray(t, dtype=object) for t in pdf["terms"]])
-        if len(pdf)
-        else []
     )
-    flat_tfs = (
-        np.concatenate([np.asarray(t, dtype=np.int64) for t in pdf["tfs"]])
-        if len(pdf)
-        else np.empty(0, dtype=np.int64)
-    )
+    flat_tfs = np.concatenate([np.asarray(t, dtype=np.int64) for t in pdf["tfs"]])
     doc_rep = np.repeat(doc_ids_col, lens)
     dl_rep = np.repeat(dls_col, lens)
     # term -> term_id (vectorized hash-join; -1 = filtered by min_count)
@@ -507,49 +514,19 @@ def encode_shard_partition(
     shard_rep = doc_rep // docs_per_shard
 
     order = np.lexsort((doc_rep, shard_rep, tid))
-    tid, doc_rep, dl_rep, flat_tfs, shard_rep = (
+    yield from _encode_scored(
         tid[order],
-        doc_rep[order],
-        dl_rep[order],
-        flat_tfs[order],
         shard_rep[order],
+        doc_rep[order],
+        flat_tfs[order],
+        dl_rep[order].astype(np.float64),
+        vm_df,
+        block_size,
+        k1,
+        b,
+        n_docs,
+        avgdl,
     )
-
-    dl_f = dl_rep.astype(np.float64)
-    tf_part = (flat_tfs * (k1 + 1.0)) / (
-        flat_tfs + k1 * (1.0 - b + b * dl_f / avgdl)
-    )
-
-    change = np.flatnonzero(
-        (tid[1:] != tid[:-1]) | (shard_rep[1:] != shard_rep[:-1])
-    )
-    starts = np.concatenate(([0], change + 1))
-    ends = np.concatenate((change + 1, [tid.size]))
-
-    out: list = []
-    idf_cache: dict[int, float] = {}
-    for s, e in zip(starts, ends):
-        t_id = int(tid[s])
-        idf = idf_cache.get(t_id)
-        if idf is None:
-            df_val = int(vm_df[t_id])
-            idf = math.log(1.0 + (n_docs - df_val + 0.5) / (df_val + 0.5))
-            idf_cache[t_id] = idf
-        encode_sorted_run(
-            t_id,
-            int(shard_rep[s]),
-            doc_rep[s:e],
-            flat_tfs[s:e],
-            idf * tf_part[s:e],
-            dl_rep[s:e],
-            block_size,
-            out,
-        )
-        if len(out) >= 2000:
-            yield pd.DataFrame(out, columns=_OUT_COLS)
-            out = []
-    if out:
-        yield pd.DataFrame(out, columns=_OUT_COLS)
 
 
 def build_postings_from_packed(
@@ -575,7 +552,7 @@ def build_postings_from_packed(
 
         return build_postings_from_tf(
             explode_packed_tf(packed), vocab, globs, cfg, docs_per_shard, block_size
-        )
+        )[0]
 
     vrows = vocab.select("term", "term_id", "df").collect()
     terms_idx = pd.Index([r["term"] for r in vrows])
@@ -619,7 +596,7 @@ def build_postings(
     )
     return build_postings_from_tf(
         tf, vocab, globs, cfg, docs_per_shard, block_size
-    )
+    )[0]
 
 
 def bucket_col(term_col: str = "term_id", n_buckets: int = DEFAULT_N_BUCKETS):

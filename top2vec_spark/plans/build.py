@@ -52,7 +52,6 @@ from top2vec_spark.operators.postings import (
     DEFAULT_DOCS_PER_SHARD,
     DEFAULT_N_BUCKETS,
     bucket_col,
-    build_postings_from_packed,
     build_postings_from_tf,
 )
 
@@ -529,23 +528,22 @@ class PostingsIndex:
         # encode ONLY the new shards' postings into the epoch's own
         # (bucket, epoch) partitions — dynamic overwrite = idempotent
         if not sub_done("postings"):
-            postings_new = (
-                build_postings_from_tf(
-                    explode_packed_tf(packed_new),
-                    vocab_t,
-                    globs,
-                    cfg=cfg,
-                    docs_per_shard=self.docs_per_shard,
-                    block_size=POSTING_BLOCK_SIZE,
-                    stats_path=f"{p}/doc_stats",
-                )
-                .withColumn("bucket", bucket_col("term_id", self.n_buckets))
-                .withColumn("epoch", F.lit(f"ep_{ep}"))
+            postings_new, n_parts = build_postings_from_tf(
+                explode_packed_tf(packed_new),
+                vocab_t,
+                globs,
+                cfg=cfg,
+                docs_per_shard=self.docs_per_shard,
+                block_size=POSTING_BLOCK_SIZE,
+                stats_path=f"{p}/doc_stats",
             )
             self._overwrite_partitions(
-                # same explicit bucket partitioning as the base build:
-                # one writer per bucket dir, no AQE re-optimization
-                postings_new.repartition(self.n_buckets, "bucket"),
+                # same bucket write as the base build (see there)
+                postings_new.withColumn(
+                    "bucket", bucket_col("term_id", self.n_buckets)
+                )
+                .withColumn("epoch", F.lit(f"ep_{ep}"))
+                .repartition(min(self.n_buckets, n_parts), "bucket"),
                 ["bucket", "epoch"],
                 f"{p}/postings",
             )
@@ -592,6 +590,41 @@ class PostingsIndex:
             df.write.mode("overwrite").partitionBy(*part_cols).parquet(path)
         finally:
             conf.set(key, prev)
+
+
+def _run_concurrent_stages(sc, stages: dict) -> None:
+    """Run independent build stages (name -> no-arg callable), one
+    driver thread each. Every Spark job a stage starts carries the
+    job tag ``build:<name>:<run id>``. The first stage to fail cancels
+    the other stages' jobs, and its exception is re-raised once every
+    thread has ended — a sibling's long job never holds a failed
+    build open. A cancelled job fails the action that started it, so
+    a cancelled stage ends at its current job; the cancel repeats until
+    then, for a stage that was between two jobs when it was first
+    cancelled."""
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+
+    run_id = time.time_ns()
+    tags = {name: f"build:{name}:{run_id}" for name in stages}
+
+    def run(name: str) -> None:
+        sc.addJobTag(tags[name])
+        sc.setInterruptOnCancel(True)
+        try:
+            stages[name]()
+        finally:
+            sc.removeJobTag(tags[name])
+
+    with ThreadPoolExecutor(max_workers=len(stages)) as pool:
+        futs = {pool.submit(run, name): name for name in stages}
+        done, pending = wait(futs, return_when=FIRST_EXCEPTION)
+        failed = [f for f in done if f.exception() is not None]
+        while failed and pending:
+            for f in pending:
+                sc.cancelJobsWithTag(tags[futs[f]])
+            _, pending = wait(pending, timeout=0.5)
+    if failed:
+        raise failed[0].exception()
 
 
 class IndexBuilder:
@@ -755,91 +788,95 @@ class IndexBuilder:
         packed_t = self.spark.read.parquet(f"{p}/tf")
         tf_t = explode_packed_tf(packed_t)
 
-        # vocab and doc_stats both derive from the materialized tf and
-        # are INDEPENDENT — submit them from two driver threads so the
-        # second job's tasks back-fill executors idled by the first
-        # job's straggler tail (guide: overlap independent jobs;
-        # Spark's scheduler runs concurrent jobs FIFO, which is
-        # exactly the back-fill behaviour wanted). globals depends on
-        # doc_stats only, so it rides the doc_stats thread. Stage
-        # markers/resume semantics are per-stage and unchanged: each
-        # thread writes its table THEN its marker.
+        # vocab, doc_stats and globals all derive from the materialized
+        # tf and are INDEPENDENT — submit them from three driver threads
+        # so each job's tasks back-fill executors idled by another's
+        # straggler tail (guide: overlap independent jobs; Spark's
+        # scheduler runs concurrent jobs FIFO, which is exactly the
+        # back-fill behaviour wanted). Stage markers/resume semantics
+        # are per-stage and unchanged: each thread writes its table
+        # THEN its marker.
         df_rows_box: list = []  # (term_id, df) rows harvested in-thread
 
         def _vocab_stage() -> None:
-            from top2vec_spark.operators.postings import DF_BROADCAST_CAP
+            from top2vec_spark.operators.postings import (
+                DF_BROADCAST_CAP,
+                broadcast_df_rows,
+            )
 
-            if not (resume and self._done("vocab")):
-                counts = (
-                    tf_t.groupBy("term")
-                    .agg(
-                        F.sum("tf").alias("cf"),
-                        F.count(F.lit(1)).alias("df"),
-                    )
-                    .filter(F.col("cf") > min_count)
-                )
-                # a vocab under the broadcast cap is collected to the
-                # driver ANYWAY for the postings df map — numbering it
-                # here (same total order as number_vocab: df desc,
-                # term asc, dense from 0) turns the ~6 tiny jobs of
-                # the distributed two-phase numbering (persist, range
-                # sample, checkpoint, counts, join, write) into ONE
-                # agg-collect + ONE write, and the postings broadcast
-                # rows come free. Over the cap: the scale-safe
-                # two-phase path, unchanged.
-                rows = counts.limit(DF_BROADCAST_CAP + 1).collect()
-                if len(rows) <= DF_BROADCAST_CAP:
-                    import pandas as pd
-
-                    # python sort == Spark's (df desc, term asc):
-                    # UTF-8 byte order preserves code-point order
-                    rows.sort(key=lambda r: (-r["df"], r["term"]))
-                    pdf = pd.DataFrame(
-                        {
-                            "term": [r["term"] for r in rows],
-                            "term_id": list(range(len(rows))),
-                            "df": [int(r["df"]) for r in rows],
-                            "cf": [int(r["cf"]) for r in rows],
-                        }
-                    )
-                    (
-                        self.spark.createDataFrame(
-                            pdf,
-                            "term string, term_id long, df long, cf long",
-                        )
-                        # right-sized files (~500k rows each), order
-                        # preserved so term/df row-group stats stay
-                        # useful to pruned vocab scans
-                        .coalesce(max(1, len(rows) // 500_000))
-                        .write.mode("overwrite")
-                        .parquet(f"{p}/vocab")
-                    )
-                    df_rows_box.append(
-                        [
-                            {"term_id": i, "df": int(r["df"])}
-                            for i, r in enumerate(rows)
-                        ]
-                    )
-                else:
-                    from top2vec_spark.operators.corpus_stats import (
-                        number_vocab,
-                    )
-
-                    number_vocab(counts).write.mode("overwrite").parquet(
-                        f"{p}/vocab"
-                    )
-                self._mark("vocab")
-            if not df_rows_box:
-                # resume-skipped (or over-cap) vocab: prefetch the
-                # postings stage's broadcast rows while the doc_stats
-                # thread still runs — same limit(cap+1) shape
-                # build_postings_from_tf would collect itself
+            if resume and self._done("vocab"):
+                # prefetch the postings stage's broadcast rows while
+                # the doc_stats thread still runs
                 df_rows_box.append(
-                    self.spark.read.parquet(f"{p}/vocab")
-                    .select("term_id", "df")
-                    .limit(DF_BROADCAST_CAP + 1)
-                    .collect()
+                    broadcast_df_rows(self.spark.read.parquet(f"{p}/vocab"))
                 )
+                return
+            counts = (
+                tf_t.groupBy("term")
+                .agg(
+                    F.sum("tf").alias("cf"),
+                    F.count(F.lit(1)).alias("df"),
+                )
+                .filter(F.col("cf") > min_count)
+                # the cap probe below and, over the cap, the numbering
+                # both read it: aggregate the corpus once. A lazy local
+                # checkpoint keeps the probe at its two jobs; persist()
+                # would add a cache-materializing job and lose AQE's
+                # partition coalescing on every build (measured)
+                .localCheckpoint(eager=False)
+            )
+            # a vocab under the broadcast cap is collected to the
+            # driver ANYWAY for the postings df map — numbering it
+            # here (same total order as number_vocab: df desc,
+            # term asc, dense from 0) turns the ~6 tiny jobs of
+            # the distributed two-phase numbering (persist, range
+            # sample, checkpoint, counts, join, write) into ONE
+            # agg-collect + ONE write, and the postings broadcast
+            # rows come free. Over the cap: the scale-safe
+            # two-phase path, unchanged.
+            rows = counts.limit(DF_BROADCAST_CAP + 1).collect()
+            if len(rows) <= DF_BROADCAST_CAP:
+                import pandas as pd
+
+                # python sort == Spark's (df desc, term asc):
+                # UTF-8 byte order preserves code-point order
+                rows.sort(key=lambda r: (-r["df"], r["term"]))
+                pdf = pd.DataFrame(
+                    {
+                        "term": [r["term"] for r in rows],
+                        "term_id": list(range(len(rows))),
+                        "df": [int(r["df"]) for r in rows],
+                        "cf": [int(r["cf"]) for r in rows],
+                    }
+                )
+                (
+                    self.spark.createDataFrame(
+                        pdf,
+                        "term string, term_id long, df long, cf long",
+                    )
+                    # right-sized files (~500k rows each), order
+                    # preserved so term/df row-group stats stay
+                    # useful to pruned vocab scans
+                    .coalesce(max(1, len(rows) // 500_000))
+                    .write.mode("overwrite")
+                    .parquet(f"{p}/vocab")
+                )
+                df_rows_box.append(
+                    [
+                        {"term_id": i, "df": int(r["df"])}
+                        for i, r in enumerate(rows)
+                    ]
+                )
+            else:
+                from top2vec_spark.operators.corpus_stats import (
+                    number_vocab,
+                )
+
+                del rows
+                number_vocab(counts).write.mode("overwrite").parquet(
+                    f"{p}/vocab"
+                )
+            self._mark("vocab")
 
         def _ds_stage() -> None:
             if resume and self._done("doc_stats"):
@@ -895,16 +932,14 @@ class IndexBuilder:
             )
             self._mark("globals")
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(_vocab_stage),
-                pool.submit(_ds_stage),
-                pool.submit(_globals_stage),
-            ]
-            for f in futs:
-                f.result()  # re-raise the first stage failure
+        _run_concurrent_stages(
+            self.spark.sparkContext,
+            {
+                "vocab": _vocab_stage,
+                "doc_stats": _ds_stage,
+                "globals": _globals_stage,
+            },
+        )
         vocab_t = self.spark.read.parquet(f"{p}/vocab")
         with open(f"{p}/globals.json") as f:
             gj = json.load(f)
@@ -921,35 +956,38 @@ class IndexBuilder:
             # bytes but pays Arrow list<string> -> Python object
             # materialization — a win on network-shuffle clusters, a
             # loss on this single box (measured).
-            postings = (
-                build_postings_from_tf(
-                    explode_packed_tf(packed_t),
-                    vocab_t,
-                    globs,
-                    cfg=self.cfg,
-                    docs_per_shard=self.docs_per_shard,
-                    block_size=self.block_size,
-                    # doc_stats is on disk by now: slim-shuffle path
-                    # (dl side-read per shard, not shuffled per row)
-                    stats_path=f"{p}/doc_stats",
-                    df_rows=df_rows_box[0] if df_rows_box else None,
+            postings, n_parts = build_postings_from_tf(
+                explode_packed_tf(packed_t),
+                vocab_t,
+                globs,
+                cfg=self.cfg,
+                docs_per_shard=self.docs_per_shard,
+                block_size=self.block_size,
+                # doc_stats is on disk by now: slim-shuffle path
+                # (dl side-read per shard, not shuffled per row)
+                stats_path=f"{p}/doc_stats",
+                df_rows=df_rows_box[0] if df_rows_box else None,
+            )
+            (
+                postings.withColumn(
+                    "bucket", bucket_col("term_id", self.n_buckets)
                 )
-                .withColumn("bucket", bucket_col("term_id", self.n_buckets))
                 # epoch partition column: the base build is epoch
                 # "base"; each incremental append writes its own
                 # (bucket, epoch=ep_*) dirs, so append retries can
                 # dynamic-overwrite ONLY their epoch (crash-safe)
                 .withColumn("epoch", F.lit("base"))
-            )
-            (
-                # explicit n_buckets partitions: one writer per bucket
-                # (same 1-file-per-bucket layout), and a fixed-num
-                # repartition skips the AQE re-optimization stage that
-                # a cols-only repartition pays (measured 2.2 -> 1.7 s
-                # for the encode+write at 50k docs). n_buckets is the
-                # scale knob — a bigger index raises it, which raises
-                # write parallelism with it.
-                postings.repartition(self.n_buckets, "bucket")
+                # hash-partitioning on the bucket value puts each
+                # bucket in exactly one write task, so every
+                # bucket=*/epoch=* dir gets one file. The task count
+                # follows the encode's own partition count (sized from
+                # the exact postings row count), capped at n_buckets:
+                # a small build writes in a few tasks instead of
+                # paying n_buckets task set-ups. A fixed-num
+                # repartition also skips the AQE re-optimization
+                # stage a cols-only one pays (measured 2.2 -> 1.7 s
+                # for the encode+write at 50k docs).
+                .repartition(min(self.n_buckets, n_parts), "bucket")
                 .write.mode("overwrite")
                 .partitionBy("bucket", "epoch")
                 .parquet(f"{p}/postings")
