@@ -84,27 +84,23 @@ def test_compression_is_compact():
 
 
 def test_batch_encode_matches_per_block():
-    """encode_varint_many / encode_gamma_many are byte-identical to
-    per-stream encodes (the build uses the batched form; the pinned
-    round-trip + WAND suites consume its output)."""
+    """encode_gamma_many is byte-identical to per-stream encodes (the
+    build uses the batched form; the pinned round-trip + WAND suites
+    consume its output)."""
     import numpy as np
 
     from top2vec_spark.operators.codec import (
         decode_blocks,
         encode_gamma,
         encode_gamma_many,
-        encode_varint,
-        encode_varint_many,
     )
 
     rng = np.random.default_rng(13)
     counts = [1, 7, 128, 3, 64, 1, 255]
     vals = rng.integers(1, 2**40, size=sum(counts), dtype=np.int64).astype(np.uint64)
     splits = np.split(vals, np.cumsum(counts)[:-1])
-    many_v = encode_varint_many(vals, counts)
     many_g = encode_gamma_many(vals, counts)
-    for part, bv, bg in zip(splits, many_v, many_g):
-        assert bv == encode_varint(part)
+    for part, bg in zip(splits, many_g):
         assert bg == encode_gamma(part)
     # round-trip through the batched decoder too
     tf_small = rng.integers(1, 200, size=sum(counts), dtype=np.int64).astype(np.uint64)

@@ -256,3 +256,132 @@ def test_stale_old_dir_cleaned_after_completed_migration(spark, tmp_path):
     assert not os.path.isdir(f"{tpath}.__migrating__")
     # and the live set still holds both deletes
     assert {3, 7} <= set(index.tombstones)
+
+
+def _api_engine(spark, path, n_docs=150, seed=52):
+    from top2vec_spark import Top2VecSpark
+
+    pdf = generate_pages_pdf(n_docs, seed=seed)
+    docs = assign_doc_ids(spark.createDataFrame(pdf[["url", "text"]])).select(
+        "doc_id", "url", "text"
+    )
+    eng = Top2VecSpark(spark, docs)
+    eng.build_index(path, docs_per_shard=64, n_buckets=8)
+    return eng, pdf
+
+
+def test_live_count_after_delete_then_append(spark, tmp_path):
+    """The num_docs bound is the LIVE count: deleted docs leave
+    ``docs`` already, so an engine derived from it (add_documents)
+    must not subtract the tombstones a second time."""
+    eng, pdf = _api_engine(spark, str(tmp_path / "la"))
+    # all 150 valid before the delete (this also caches the bounds)
+    eng.search_documents_by_keywords(["wa"], 150, return_documents=False)
+    eng.delete_documents([0, 1, 2, 3, 4])
+    with pytest.raises(ValueError, match="number of documents: 145"):
+        eng.search_documents_by_keywords(["wa"], 146)
+    new = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(pdf["text"].iloc[:10])],
+        "doc_id long, text string",
+    )
+    out = eng.add_documents(new)
+    assert out.docs.count() == 155
+    out.search_documents_by_keywords(["wa"], 155, return_documents=False)
+    with pytest.raises(ValueError, match="number of documents: 155"):
+        out.search_documents_by_keywords(["wa"], 156)
+
+
+def test_live_count_and_ids_after_delete_then_compact(spark, tmp_path):
+    """Compaction clears the tombstones, so bounds cached before it
+    (whose dense range relied on them) must not survive it: the
+    deleted id stays invalid and num_docs stays bounded by the live
+    count."""
+    eng, _ = _api_engine(spark, str(tmp_path / "lc"))
+    eng._validate_doc_ids([0])  # caches the dense bounds
+    eng.delete_documents([0, 1, 2, 3, 4])
+    eng.compact_index()
+    with pytest.raises(ValueError, match="0 is not a valid document id"):
+        eng._validate_doc_ids([0])
+    with pytest.raises(ValueError, match="number of documents: 145"):
+        eng.search_documents_by_keywords(["wa"], 150)
+    eng._validate_doc_ids([5, 149])
+    assert len(
+        eng.search_documents_by_keywords(["wa"], 145, return_documents=False)
+        .collect()
+    ) <= 145
+
+
+def _max_in_list(plan: str) -> int:
+    """Literal count of the longest IN / INSET list in a plan string
+    (Spark turns a long ``isin`` into INSET)."""
+    import re
+
+    lists = re.findall(r"INSET ([-\d, ]+)", plan)
+    lists += re.findall(r" IN \(([^()]*)\)", plan)
+    return max((len(m.split(",")) for m in lists), default=0)
+
+
+def test_mass_delete_plans_anti_join_not_id_lists(spark, tmp_path, monkeypatch):
+    """With 10^5 tombstones every query-language and aggregation plan
+    drops deleted docs through one LeftAnti join, never an IN list of
+    the ids; repeated deletes keep ONE anti-join on ``docs``, which
+    still executes once compaction has deleted the tombstone files."""
+    from pyspark.sql import DataFrame
+
+    eng, _ = _api_engine(spark, str(tmp_path / "mp"), n_docs=200, seed=53)
+    top = eng.search_documents_by_keywords(["wa"], 1, return_documents=False)
+    gone = top.collect()[0]["doc_id"]
+    # a partitioned tombstone write of 10^5 ids beyond the corpus, on
+    # the raw index: ``docs`` itself carries no anti-join, so every
+    # LeftAnti below is the query path's own
+    eng._index.delete_documents([gone, *range(10**6, 10**6 + 100_000)])
+    eng._doc_id_bounds()  # warm: the plans below are the calls' own
+
+    def plans_of(call):
+        """Optimized plan of every frame the call executes."""
+        seen = []
+        cls = type(eng.docs)  # the concrete (classic) DataFrame class
+        for name in ("collect", "count", "localCheckpoint"):
+            orig = getattr(cls, name)
+
+            def spy(self, *a, _orig=orig, **kw):
+                seen.append(self._jdf.queryExecution().optimizedPlan().toString())
+                return _orig(self, *a, **kw)
+
+            monkeypatch.setattr(cls, name, spy)
+        try:
+            out = call()
+        finally:
+            monkeypatch.undo()
+        if isinstance(out, DataFrame):
+            seen.append(out._jdf.queryExecution().optimizedPlan().toString())
+        return out, seen
+
+    calls = {
+        "facet_counts": lambda: eng.facet_counts("wa wb", "url", 5),
+        "count_matches": lambda: eng.count_matches("wa wb"),
+        "search": lambda: eng.search("+wa wb", 5),
+        "significant_terms": lambda: eng.significant_terms("wa", 5),
+        "phrase": lambda: eng.search_documents_by_phrase(["wa", "wb"], 5),
+    }
+    for name, call in calls.items():
+        out, plans = plans_of(call)
+        assert plans, name
+        assert any("LeftAnti" in p for p in plans), name
+        assert max(_max_in_list(p) for p in plans) <= 1000, name
+        if isinstance(out, DataFrame) and "doc_id" in out.columns:
+            assert gone not in {r["doc_id"] for r in out.collect()}, name
+
+    assert "LeftAnti" not in eng.docs._jdf.queryExecution().analyzed().toString()
+    more = [
+        r["doc_id"]
+        for r in eng.search_documents_by_keywords(["wb"], 3, return_documents=False)
+        .collect()
+    ]
+    for d in more:
+        eng.delete_documents([d])
+    analyzed = eng.docs._jdf.queryExecution().analyzed().toString()
+    assert analyzed.count("LeftAnti") <= 1
+    assert _max_in_list(analyzed) <= 1000
+    eng.compact_index()
+    assert eng.docs.count() == 200 - 4

@@ -92,9 +92,9 @@ def _assert_identical(got: pd.DataFrame, want: pd.DataFrame) -> None:
             assert got[col].tolist() == want[col].tolist(), col
 
 
-def _chunks(pdf: pd.DataFrame, size: int = 3_331) -> list:
+def _chunks(pdf: pd.DataFrame) -> list:
     """Several batches whose boundaries cut through runs."""
-    return [pdf.iloc[i : i + size] for i in range(0, len(pdf), size)]
+    return [pdf.iloc[i : i + 3_331] for i in range(0, len(pdf), 3_331)]
 
 
 def _collect(frames) -> pd.DataFrame:
@@ -140,37 +140,6 @@ def test_sidecar_kernel_matches_per_run_reference(rows, tmp_path):
     got = _collect(
         P.encode_partition_sidecar(
             iter(_chunks(slim)), BLOCK, K1, B, N_DOCS, AVGDL, df_map, str(tmp_path)
-        )
-    )
-    _assert_identical(got, want)
-
-
-def test_packed_kernel_matches_per_run_reference(rows):
-    pdf = rows.sort_values(["term_id", "shard", "doc_id"], ignore_index=True)
-    want = _reference(pdf)
-    names = [f"w{t}" for t in range(int(pdf["term_id"].max()) + 1)]
-    by_doc = rows.sort_values("doc_id").groupby("doc_id")
-    packed = pd.DataFrame(
-        {
-            "doc_id": list(by_doc.groups),
-            "terms": [[names[t] for t in ts] for ts in by_doc["term_id"].agg(list)],
-            "tfs": list(by_doc["tf"].agg(list)),
-            "dl": by_doc["dl"].first().to_numpy(),
-        }
-    )
-    df_by_id = np.zeros(len(names), dtype=np.int64)
-    df_by_id[pdf["term_id"].to_numpy()] = pdf["df"].to_numpy()
-    # one term absent from the vocab (min_count-filtered): dropped
-    vm = {
-        "terms": pd.Index(names + ["unseen"]),
-        "ids": np.arange(len(names) + 1, dtype=np.int64),
-        "df": df_by_id,
-    }
-    packed.at[0, "terms"] = packed.at[0, "terms"] + ["filtered"]
-    packed.at[0, "tfs"] = packed.at[0, "tfs"] + [5]
-    got = _collect(
-        P.encode_shard_partition(
-            iter(_chunks(packed, 997)), vm, DPS, BLOCK, K1, B, N_DOCS, AVGDL
         )
     )
     _assert_identical(got, want)

@@ -16,8 +16,8 @@ from top2vec_spark.operators.corpus_stats import (
     build_vocab,
     compute_globals,
 )
-from top2vec_spark.operators.postings import build_postings
-from top2vec_spark.operators.tokens import tokenize_docs
+from top2vec_spark.operators.postings import build_postings_from_tf
+from top2vec_spark.operators.tokens import explode_packed_tf, pack_tokens, tokenize_docs
 from top2vec_spark.sources.pages import generate_pages_pdf
 
 BLOCK = 16
@@ -44,9 +44,14 @@ def built(spark, corpus):
     vocab = build_vocab(tokens).cache()
     ds = build_doc_stats(tokens).cache()
     g = compute_globals(ds)
-    postings = build_postings(
-        tokens, vocab, ds, g, docs_per_shard=DPS, block_size=BLOCK
-    ).cache()
+    postings, _ = build_postings_from_tf(
+        explode_packed_tf(pack_tokens(tokens)),
+        vocab,
+        g,
+        docs_per_shard=DPS,
+        block_size=BLOCK,
+    )
+    postings = postings.cache()
     return tokens, vocab, ds, g, postings
 
 
@@ -121,19 +126,21 @@ def test_head_term_spreads_across_shards(built):
 def test_zipf_head_term_no_encode_straggler(spark):
     """Adversarial skew-stress for the build (round-4 verdict item 8;
     SURVEY §4 head-term salting claim): a corpus where ONE term occurs
-    in ~50% of all documents. The salt is the doc-shard, so the head
-    term's postings work spreads over every shard instead of
-    hot-spotting one reducer the way a plain repartition-by-term
-    would. Pins, per encode partition, (a) input-row balance
-    (deterministic for this fixture) and (b) measured kernel wall time
-    within a straggler bound of the median (loose vs the ~2x target to
-    absorb host co-tenant noise; BENCH/SKEW_r5.md records actuals)."""
+    in ~50% of all documents. The salt is the doc-shard: the encode
+    shuffle of ``build_postings_from_tf`` hashes on (term_id, shard),
+    so the head term's postings work spreads over every partition
+    instead of hot-spotting one reducer the way a plain
+    repartition-by-term would. Pins, per encode partition, (a)
+    input-row balance (deterministic for this fixture) and (b)
+    measured kernel wall time within a straggler bound of the median
+    (loose vs the ~2x target to absorb host co-tenant noise;
+    BENCH/SKEW_r5.md records actuals)."""
     import statistics
     import string
     import time
 
-    import numpy as np
     import pandas as pd
+    from pyspark import TaskContext
     from pyspark.sql import functions as F
 
     from top2vec_spark.operators import postings as P
@@ -142,7 +149,6 @@ def test_zipf_head_term_no_encode_straggler(spark):
         build_vocab,
         compute_globals,
     )
-    from top2vec_spark.operators.tokens import pack_tokens, tokenize_docs
 
     def w(j):  # letter-only term names (digits terminate tokens)
         s = ""
@@ -153,7 +159,7 @@ def test_zipf_head_term_no_encode_straggler(spark):
             if j == 0:
                 return "w" + s
 
-    n_docs, dps, n_parts = 4096, 16, 16
+    n_docs, dps = 4096, 16
     rows = []
     for i in range(n_docs):
         toks = []
@@ -166,27 +172,45 @@ def test_zipf_head_term_no_encode_straggler(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string").repartition(16)
 
     toks = tokenize_docs(docs, ascii_fast_path=True)
-    vocab = build_vocab(toks)
+    vocab = build_vocab(toks).cache()
     globs = compute_globals(build_doc_stats(toks))
-    packed = pack_tokens(toks)
+    tf = explode_packed_tf(pack_tokens(toks)).cache()
 
     # the head term really is in ~50% of docs
     head_df = vocab.filter(F.col("term") == "headword").first()["df"]
     assert head_df == n_docs // 2
 
-    vrows = vocab.select("term", "term_id", "df").collect()
-    df_by_id = np.zeros(len(vrows), dtype=np.int64)
-    for r in vrows:
-        df_by_id[int(r["term_id"])] = int(r["df"])
-    vm = {
-        "terms": pd.Index([r["term"] for r in vrows]),
-        "ids": np.array([r["term_id"] for r in vrows], dtype=np.int64),
-        "df": df_by_id,
+    out, n_parts = P.build_postings_from_tf(tf, vocab, globs, docs_per_shard=dps)
+    out = out.cache()
+    # input rows per encode partition, read off the build's own output:
+    # mapInPandas keeps the shuffle's partitioning, and each block
+    # carries its n postings rows
+    built = {
+        r["p"]: r["rows"]
+        for r in out.groupBy(F.spark_partition_id().alias("p"))
+        .agg(F.sum("n").alias("rows"))
+        .collect()
     }
-    n, avgdl = globs.n_docs, globs.avgdl
+    assert len(built) >= 8  # work really spread over many partitions
+    row_counts = list(built.values())
+    med_rows = statistics.median(row_counts)
+    # deterministic for this fixture (dense ids, fixed hash): the head
+    # term adds one row per even doc, spread uniformly
+    assert max(row_counts) <= 2.0 * med_rows, row_counts
 
-    sharded = packed.repartition(
-        n_parts, (F.col("doc_id") / F.lit(dps)).cast("int")
+    # kernel wall time per partition: the same (term_id, shard)
+    # repartition the build plans (same keys, types and partition
+    # count, proven by equal per-partition row counts), timed around
+    # the production encode kernel
+    vrows = vocab.select("term", "term_id", "df").collect()
+    df_map = {int(r["term_id"]): int(r["df"]) for r in vrows}
+    n, avgdl = globs.n_docs, globs.avgdl
+    shuffled = (
+        tf.join(F.broadcast(vocab.select("term", "term_id")), "term")
+        .withColumn("shard", (F.col("doc_id") / F.lit(dps)).cast("int"))
+        .select("term_id", "shard", "doc_id", "tf", "dl")
+        .repartition(n_parts, "term_id", "shard")
+        .sortWithinPartitions("term_id", "shard", "doc_id")
     )
 
     def timed(pdfs):
@@ -194,28 +218,18 @@ def test_zipf_head_term_no_encode_straggler(spark):
         nrows = sum(len(c) for c in chunks)
         t0 = time.perf_counter()
         nblocks = 0
-        for out in P.encode_shard_partition(
-            iter(chunks), vm, dps, 128, 1.2, 0.75, n, avgdl
+        for blocks in P.encode_partition(
+            iter(chunks), 128, 1.2, 0.75, n, avgdl, df_map=df_map
         ):
-            nblocks += len(out)
+            nblocks += len(blocks)
         yield pd.DataFrame(
-            {"sec": [time.perf_counter() - t0],
-             "rows": [nrows], "blocks": [nblocks]}
+            {"p": [TaskContext.get().partitionId()],
+             "sec": [time.perf_counter() - t0], "rows": [nrows]}
         )
 
-    stats = sharded.mapInPandas(
-        timed, "sec double, rows long, blocks long"
-    ).collect()
-    stats = [r for r in stats if r["rows"] > 0]
-    assert len(stats) >= 8  # work really spread over many partitions
-
-    row_counts = [r["rows"] for r in stats]
-    med_rows = statistics.median(row_counts)
-    # deterministic for this fixture (dense ids, fixed hash): the head
-    # term adds one packed row per even doc, spread uniformly
-    assert max(row_counts) <= 2.0 * med_rows, row_counts
-
-    secs = [r["sec"] for r in stats]
+    stats = shuffled.mapInPandas(timed, "p int, sec double, rows long").collect()
+    assert {r["p"]: r["rows"] for r in stats if r["rows"] > 0} == built
+    secs = [r["sec"] for r in stats if r["rows"] > 0]
     med = statistics.median(secs)
     # target ~2x; assert 3x + 150 ms absolute slack (host co-tenant
     # noise on sub-100ms kernels), record actuals in BENCH/SKEW_r5.md
@@ -225,7 +239,6 @@ def test_zipf_head_term_no_encode_straggler(spark):
     # spread the skew; a term-keyed shuffle would put all of these in
     # one task)
     head_id = next(int(r["term_id"]) for r in vrows if r["term"] == "headword")
-    out = P.build_postings_from_packed(packed, vocab, globs, docs_per_shard=dps)
     n_shards_head = (
         out.filter(F.col("term_id") == head_id)
         .select("shard").distinct().count()

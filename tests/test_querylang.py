@@ -1876,3 +1876,68 @@ def test_numeric_exact_filter_typed(spark, range_env):
             spark, tokens, ds, g, vocab,
             parse_query("fast n_chars:abc"), 20, doc_meta=docs,
         ).collect()
+
+
+def test_every_aggregation_honours_deletes(spark, range_env, tmp_path):
+    """Delete the top match of a query: every match-set method —
+    count_matches, the six metadata aggregations, significant_terms,
+    collapse_search and rescore — answers over the live documents
+    only, and count_matches drops by exactly the deleted matches."""
+    from collections import Counter
+
+    from top2vec_spark.api import Top2VecSpark
+
+    rows, docs, _, _, _, _ = range_env
+    eng = Top2VecSpark(spark, docs, ascii_fast_path=True, min_count=0)
+    eng.build_index(str(tmp_path / "aggdel"))
+    q = "fast table"
+    toks = {d: _pytoks(t) for d, t in CORPUS}
+    match = {d for d, ts in toks.items() if "fast" in ts or "table" in ts}
+    n_before = eng.count_matches(q)
+    assert n_before == len(match)
+    gone = eng.search(q, 1, return_documents=False).collect()[0]["doc_id"]
+    eng.delete_documents([gone])
+    live = match - {gone}
+    lang = {d: l for d, _, l, _ in rows}
+    n_chars = {d: n for d, _, _, n in rows}
+
+    assert eng.count_matches(q) == n_before - 1
+    assert {
+        r["key"]: r["doc_count"] for r in eng.facet_counts(q, "lang").collect()
+    } == Counter(lang[d] for d in live if lang[d] is not None)
+    assert {
+        r["bucket"]: r["doc_count"]
+        for r in eng.histogram_counts(q, "n_chars", 10).collect()
+    } == Counter(n_chars[d] // 10 * 10 for d in live)
+    st = eng.stats_agg(q, "n_chars").collect()[0]
+    assert (st["doc_count"], st["sum"]) == (
+        len(live), sum(n_chars[d] for d in live)
+    )
+    assert {
+        r["key"]: (r["doc_count"], r["sum"])
+        for r in eng.facet_stats(q, "lang", "n_chars").collect()
+    } == {
+        l: (sum(1 for d in live if lang[d] == l),
+            sum(n_chars[d] for d in live if lang[d] == l))
+        for l in {lang[d] for d in live} - {None}
+    }
+    cut = sorted(n_chars[d] for d in match)[len(match) // 2]
+    assert [
+        r["doc_count"]
+        for r in eng.range_agg(q, "n_chars", [(None, cut), (cut, None)]).collect()
+    ] == [
+        sum(1 for d in live if n_chars[d] < cut),
+        sum(1 for d in live if n_chars[d] >= cut),
+    ]
+    collapsed = eng.collapse_search(q, "lang", 5, return_documents=False).collect()
+    assert gone not in {r["doc_id"] for r in collapsed}
+    assert {r["lang"] for r in collapsed} == {lang[d] for d in live} - {None}
+    for r in eng.significant_terms(q, 50).collect():
+        assert r["fg_count"] == sum(1 for d in live if r["term"] in toks[d])
+    rescored = eng.rescore("+fast table", "scan", 3, window_size=5,
+                           return_documents=False).collect()
+    assert rescored and gone not in {r["doc_id"] for r in rescored}
+    searched = eng.search("+fast table", 5, return_documents=False).collect()
+    assert {r["doc_id"] for r in searched} == {
+        d for d in live if "fast" in toks[d]
+    }

@@ -242,21 +242,28 @@ class Top2VecSpark:
             return load_position_postings(self.spark, self._index.path, words)
         return self.tokens
 
+    def _live(self, df: DataFrame) -> DataFrame:
+        """``df`` without the index's deleted documents
+        (PostingsIndex._live: one anti-join, or ``df`` itself when
+        nothing is deleted or no index is built)."""
+        idx = getattr(self, "_index", None)
+        return df if idx is None else idx._live(df)
+
+    def _n_deleted(self) -> int:
+        """Tombstone count — sizes the over-fetch of the top-k
+        operators that drop deleted docs after ranking."""
+        idx = getattr(self, "_index", None)
+        return 0 if idx is None else len(idx.tombstones)
+
     def _exclude_tombstones(self, result: DataFrame, k: int, order) -> DataFrame:
         """Post-delete consistency for positional queries (which have
         no WAND path): the over-fetch + exclude + re-limit contract —
         ranks/scores keep the stale corpus stats exactly like the
         tombstoned WAND path, deleted docs just drop out of the
         result."""
-        tombs = (
-            self._index.tombstones
-            if getattr(self, "_index", None) is not None
-            else frozenset()
-        )
-        if not tombs:
-            return result.limit(k) if k is not None else result
-        out = result.filter(~F.col("doc_id").isin([int(d) for d in tombs]))
-        out = out.orderBy(*order)
+        out = self._live(result)
+        if out is not result:
+            out = out.orderBy(*order)
         return out.limit(k) if k is not None else out
 
     def compact_index(self):
@@ -266,31 +273,29 @@ class Top2VecSpark:
         stored packed tf, never re-reading raw text) under THIS
         engine's min_count. After the compaction, the surviving corpus
         is the new ground truth: ``self.docs`` drops any doc_id the
-        index had tombstoned (left_anti against the distributed
-        tombstone table — correct even for deletes registered on the
-        raw index rather than through api.delete_documents), and every
+        index had tombstoned (the anti-join of :meth:`_drop_deleted` —
+        correct even for deletes registered on the raw index rather
+        than through api.delete_documents), and every
         engine-level derivation (tokens, vocab, doc_stats, globals,
         driver vocab map) is re-derived so the brute fallback, the
         WAND path (which passes ``self.globals``), and validation all
         agree with the index's recomputed survivor statistics."""
-        import os
-
         if getattr(self, "_index", None) is None:
             raise ValueError("no index — build_index first")
-        tpath = self._index.tombstones_path
-        if os.path.isdir(tpath):
-            # eager localCheckpoint: the compaction swap DELETES the
-            # tombstone files, so the filtered-docs plan must not keep
-            # a lazy scan of them (tiny table — ids only)
-            tomb = (
-                self.spark.read.parquet(tpath)
-                .select("doc_id")
-                .localCheckpoint()
-            )
-            self.docs = self.docs.join(tomb, "doc_id", "left_anti")
+        self._drop_deleted()
+        tombs = self._index._tomb_frame()
+        if tombs is not None:
+            # the compaction swap DELETES the tombstone files: fill the
+            # checkpoint the live frames anti-join against first
+            tombs.count()
         self._index = self._index.compact(
             min_count=self.min_count, cfg=self.cfg
         )
+        # the compacted index has no tombstones: the next delete
+        # anti-joins the frames as they stand now, and the id bounds
+        # (whose dense flag read "range minus tombstones") recompute
+        self.__dict__.pop("_pre_delete", None)
+        self.__dict__.pop("_id_bounds", None)
         self._derive_corpus_tables()
         if hasattr(self, "_vocab_map"):
             del self._vocab_map
@@ -564,7 +569,6 @@ class Top2VecSpark:
         other shape runs the mixed executor over the term-pruned
         token/sidecar scans."""
         self._validate_num_docs(num_docs)
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
         if (
             search_after is None
             and sort is None
@@ -579,8 +583,8 @@ class Top2VecSpark:
                 self._validate_keywords(terms)
                 result = self._topk(pos, neg, num_docs)
                 return self._project(result, return_documents)
-        scored = self._query_match_scores(
-            query, min_should_match=min_should_match
+        scored = self._live(
+            self._query_match_scores(query, min_should_match=min_should_match)
         )
         if search_after is not None:
             if sort is not None:
@@ -617,8 +621,7 @@ class Top2VecSpark:
                 )
         else:
             order = [F.col("score").desc(), F.col("doc_id").asc()]
-        result = scored.orderBy(*order).limit(num_docs + len(tombs))
-        result = self._exclude_tombstones(result, num_docs, order)
+        result = scored.orderBy(*order).limit(num_docs)
         if sort is not None:
             # drop sort columns _project re-adds from the docs side
             # (url / projected text) — a duplicate column name would
@@ -639,18 +642,28 @@ class Top2VecSpark:
                 result = result.drop(*collide)
         return self._project(result, return_documents, order=order)
 
-    @staticmethod
-    def _reject_join_key_field(field: str, what: str) -> None:
-        """Aggregation/collapse fields join the match set to
-        docs.select('doc_id', field) — field='doc_id' would duplicate
-        the join key and die later with an ambiguous-reference
-        AnalysisException; reject it up front with a clean error
-        ('score' is not a metadata column, so the unknown-field check
-        already covers it)."""
+    def _meta_field(self, field: str, what: str, numeric: bool = False) -> None:
+        """Validate a metadata column an aggregation/collapse joins in
+        through docs.select('doc_id', field): it must exist, must not
+        be 'doc_id' (that would duplicate the join key and die later
+        with an ambiguous-reference AnalysisException; 'score' is not a
+        metadata column, so the unknown-field check covers it), and
+        with ``numeric`` must have a numeric type. ``what`` names the
+        field's role in the error messages."""
+        if field not in self.docs.columns:
+            raise ValueError(
+                f"unknown {what} field '{field}' — not a metadata column"
+            )
         if field == "doc_id":
             raise ValueError(
                 f"'doc_id' cannot be a {what} field (it is the join key)"
             )
+        if not numeric:
+            return
+        dtype = self.docs.schema[field].dataType.simpleString()
+        if dtype not in ("tinyint", "smallint", "int", "bigint",
+                         "float", "double") and not dtype.startswith("decimal"):
+            raise ValueError(f"{what} field '{field}' ({dtype}) is not numeric")
 
     def _sort_order(self, sort) -> list:
         """Validate an ES-style sort spec [(field, 'asc'|'desc'), ...]
@@ -853,16 +866,9 @@ class Top2VecSpark:
         forms no bucket (ES's missing-bucket default). Tombstoned
         documents are excluded before bucketing, so facet counts
         always agree with what a paging user can retrieve."""
-        if field not in self.docs.columns:
-            raise ValueError(
-                f"unknown facet field '{field}' — not a metadata column"
-            )
-        self._reject_join_key_field(field, "facet")
+        self._meta_field(field, "facet")
         self._validate_num(num_facets, "num_facets")
-        scored = self._query_match_scores(query)
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
-        if tombs:
-            scored = scored.filter(~F.col("doc_id").isin(list(tombs)))
+        scored = self._live(self._query_match_scores(query))
         return (
             scored.join(self.docs.select("doc_id", field), "doc_id")
             .filter(F.col(field).isNotNull())
@@ -884,23 +890,10 @@ class Top2VecSpark:
         as :meth:`facet_counts`: the scored match set + one metadata
         join + a two-phase hash aggregation on the (derived, still
         low-cardinality) bucket key — one Exchange."""
-        if field not in self.docs.columns:
-            raise ValueError(
-                f"unknown histogram field '{field}' — not a metadata column"
-            )
-        self._reject_join_key_field(field, "histogram")
-        dtype = self.docs.schema[field].dataType.simpleString()
-        if dtype not in ("tinyint", "smallint", "int", "bigint",
-                        "float", "double") and not dtype.startswith("decimal"):
-            raise ValueError(
-                f"histogram field '{field}' ({dtype}) is not numeric"
-            )
+        self._meta_field(field, "histogram", numeric=True)
         if not isinstance(interval, (int, float)) or interval <= 0:
             raise ValueError("interval must be a positive number")
-        scored = self._query_match_scores(query)
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
-        if tombs:
-            scored = scored.filter(~F.col("doc_id").isin(list(tombs)))
+        scored = self._live(self._query_match_scores(query))
         bucket = (
             F.floor(F.col(field) / F.lit(interval)) * F.lit(interval)
         ).cast("double" if isinstance(interval, float) else "bigint")
@@ -920,21 +913,8 @@ class Top2VecSpark:
         excluded). Same plan family as :meth:`facet_counts` with the
         final aggregation global: partial aggregates per partition,
         one single-row Exchange."""
-        if field not in self.docs.columns:
-            raise ValueError(
-                f"unknown stats field '{field}' — not a metadata column"
-            )
-        self._reject_join_key_field(field, "stats")
-        dtype = self.docs.schema[field].dataType.simpleString()
-        if dtype not in ("tinyint", "smallint", "int", "bigint",
-                        "float", "double") and not dtype.startswith("decimal"):
-            raise ValueError(
-                f"stats field '{field}' ({dtype}) is not numeric"
-            )
-        scored = self._query_match_scores(query)
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
-        if tombs:
-            scored = scored.filter(~F.col("doc_id").isin(list(tombs)))
+        self._meta_field(field, "stats", numeric=True)
+        scored = self._live(self._query_match_scores(query))
         return (
             scored.join(self.docs.select("doc_id", field), "doc_id")
             .filter(F.col(field).isNotNull())
@@ -964,23 +944,10 @@ class Top2VecSpark:
         Plan: one metadata join carrying both columns + a single
         two-phase hash aggregation (one Exchange on the bucket
         key)."""
-        for fld in (key_field, metric_field):
-            if fld not in self.docs.columns:
-                raise ValueError(
-                    f"unknown facet field '{fld}' — not a metadata column"
-                )
-            self._reject_join_key_field(fld, "facet")
-        dtype = self.docs.schema[metric_field].dataType.simpleString()
-        if dtype not in ("tinyint", "smallint", "int", "bigint",
-                        "float", "double") and not dtype.startswith("decimal"):
-            raise ValueError(
-                f"stats field '{metric_field}' ({dtype}) is not numeric"
-            )
+        self._meta_field(key_field, "facet")
+        self._meta_field(metric_field, "stats", numeric=True)
         self._validate_num(num_facets, "num_facets")
-        scored = self._query_match_scores(query)
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
-        if tombs:
-            scored = scored.filter(~F.col("doc_id").isin(list(tombs)))
+        scored = self._live(self._query_match_scores(query))
         return (
             scored.join(
                 self.docs.select("doc_id", key_field, metric_field), "doc_id"
@@ -1018,16 +985,9 @@ class Top2VecSpark:
         and the per-group state is one row."""
         from pyspark.sql import Window
 
-        if field not in self.docs.columns:
-            raise ValueError(
-                f"unknown collapse field '{field}' — not a metadata column"
-            )
-        self._reject_join_key_field(field, "collapse")
+        self._meta_field(field, "collapse")
         self._validate_num_docs(num_docs)
-        scored = self._query_match_scores(query)
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
-        if tombs:
-            scored = scored.filter(~F.col("doc_id").isin(list(tombs)))
+        scored = self._live(self._query_match_scores(query))
         w = Window.partitionBy(field).orderBy(
             F.col("score").desc(), F.col("doc_id").asc()
         )
@@ -1064,17 +1024,7 @@ class Top2VecSpark:
         metadata counts nowhere; tombstones excluded. Plan: match set
         + one metadata join + one aggregate of K conditional counts —
         single-row Exchange, no per-bucket scan."""
-        if field not in self.docs.columns:
-            raise ValueError(
-                f"unknown range field '{field}' — not a metadata column"
-            )
-        self._reject_join_key_field(field, "range")
-        dtype = self.docs.schema[field].dataType.simpleString()
-        if dtype not in ("tinyint", "smallint", "int", "bigint",
-                        "float", "double") and not dtype.startswith("decimal"):
-            raise ValueError(
-                f"range field '{field}' ({dtype}) is not numeric"
-            )
+        self._meta_field(field, "range", numeric=True)
         if not isinstance(ranges, (list, tuple)) or not ranges:
             raise ValueError(
                 "ranges must be a non-empty list of (lo, hi) pairs"
@@ -1097,10 +1047,7 @@ class Top2VecSpark:
             preds.append(p)
             labels.append(f"{'*' if lo is None else lo}-"
                           f"{'*' if hi is None else hi}")
-        scored = self._query_match_scores(query)
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
-        if tombs:
-            scored = scored.filter(~F.col("doc_id").isin(list(tombs)))
+        scored = self._live(self._query_match_scores(query))
         joined = scored.join(self.docs.select("doc_id", field), "doc_id")
         counts = joined.agg(
             *[
@@ -1135,10 +1082,7 @@ class Top2VecSpark:
         corpus; the background stats are free from the vocab table.
         Tombstones excluded."""
         self._validate_num(num_terms, "num_terms")
-        scored = self._query_match_scores(query)
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
-        if tombs:
-            scored = scored.filter(~F.col("doc_id").isin(list(tombs)))
+        scored = self._live(self._query_match_scores(query))
         # ONE execution of the match set: the eager localCheckpoint
         # materializes it, the count reads the materialization, and the
         # semi-join below reuses it (previously the unpersisted plan
@@ -1228,7 +1172,6 @@ class Top2VecSpark:
                 "num_docs cannot exceed window_size (the rescore "
                 "window bounds the result)"
             )
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
         plain = (
             self._plain_query_terms(query)
             if getattr(self, "_index", None) is not None
@@ -1244,9 +1187,7 @@ class Top2VecSpark:
             self._validate_keywords(terms)
             window = self._topk(pos, neg, window_size).collect()
         else:
-            first = self._query_match_scores(query)
-            if tombs:
-                first = first.filter(~F.col("doc_id").isin(list(tombs)))
+            first = self._live(self._query_match_scores(query))
             window = (
                 first.orderBy(F.col("score").desc(), F.col("doc_id").asc())
                 .limit(window_size)
@@ -1314,13 +1255,12 @@ class Top2VecSpark:
         self._validate_list_arg(phrase, "phrase", "strings")
         self._validate_num_docs(num_docs)
         self._validate_keywords([t.lower() for t in phrase])
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
         result = phrase_topk(
             self._positional_tokens(phrase),
             self.doc_stats,
             self.globals,
             phrase,
-            num_docs + len(tombs),
+            num_docs + self._n_deleted(),
             vocab=self.vocab,
         )
         result = self._exclude_tombstones(
@@ -1341,7 +1281,6 @@ class Top2VecSpark:
         self._validate_list_arg(keywords, "keywords", "strings")
         self._validate_num_docs(num_docs)
         self._validate_keywords([k.lower() for k in keywords])
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
         result = bool_and_topk(
             self.spark,
             self._positional_tokens(keywords),
@@ -1349,7 +1288,7 @@ class Top2VecSpark:
             self.globals,
             self.vocab,
             keywords,
-            num_docs + len(tombs),
+            num_docs + self._n_deleted(),
         )
         result = self._exclude_tombstones(
             result, num_docs, [F.col("score").desc(), F.col("doc_id").asc()]
@@ -1477,10 +1416,7 @@ class Top2VecSpark:
         the FULL match set :meth:`search` ranks (every scoring,
         filter, and must rule applied; tombstones excluded) — the
         Lucene TotalHitCountCollector / ES track_total_hits shape."""
-        scored = self._query_match_scores(query)
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
-        if tombs:
-            scored = scored.filter(~F.col("doc_id").isin(list(tombs)))
+        scored = self._live(self._query_match_scores(query))
         return scored.count()
 
     def search_words_by_keywords(
@@ -3486,31 +3422,13 @@ class Top2VecSpark:
         self._validate_doc_ids(doc_ids)
         if self._index is not None:
             self._index.delete_documents(doc_ids)
-            self.docs = self.docs.filter(~F.col("doc_id").isin(list(doc_ids)))
+            self._drop_deleted()
+            if hasattr(self, "_id_bounds"):  # validated: every id was live
+                lo, hi, n, dense = self._id_bounds
+                n -= len({int(i) for i in doc_ids})
+                self._id_bounds = (lo, hi, n, dense)
             if hasattr(self, "doc_topic"):  # A5: sizes shrink in place
-                self.doc_topic = self.doc_topic.filter(
-                    ~F.col("doc_id").isin(list(doc_ids))
-                )
-                # the reduced mirror is a membership mapping over
-                # doc_topic: filter it the same way (reference
-                # delete_documents rewrites doc_top_reduced too,
-                # top2vec.py:2084-2122); word tables stay stale by
-                # design like topic_words
-                if hasattr(self, "doc_topic_reduced"):
-                    self.doc_topic_reduced = self.doc_topic_reduced.filter(
-                        ~F.col("doc_id").isin(list(doc_ids))
-                    )
                 self._invalidate_topic_caches()
-            # brute vector path must also stop returning deleted docs
-            # (reference np.delete's document_vectors, top2vec.py:2091)
-            if hasattr(self, "_topic_embeddings"):
-                self._topic_embeddings = self._topic_embeddings.filter(
-                    ~F.col("vec_id").isin(list(doc_ids))
-                )
-            if hasattr(self, "_doc_vectors"):
-                self._doc_vectors = self._doc_vectors.filter(
-                    ~F.col("vec_id").isin(list(doc_ids))
-                )
             # ANN index: tombstone, not rebuild (hnswlib mark_deleted
             # parity, top2vec.py:2104-2110)
             if getattr(self, "_document_index", None) is not None:
@@ -3560,6 +3478,38 @@ class Top2VecSpark:
                 self, "_doc_index_tombstones", frozenset()
             ) | frozenset(int(d) for d in doc_ids)
         return out
+
+    # doc-keyed frames a delete shrinks, with their id column: the
+    # corpus, the topic memberships (the reference's delete_documents
+    # rewrites doc_top and doc_top_reduced, top2vec.py:2084-2122; word
+    # tables stay stale by design like topic_words) and the vectors
+    # the brute vector path reads (reference np.delete's
+    # document_vectors, top2vec.py:2091)
+    _DOC_KEYED = (
+        ("docs", "doc_id"),
+        ("doc_topic", "doc_id"),
+        ("doc_topic_reduced", "doc_id"),
+        ("_topic_embeddings", "vec_id"),
+        ("_doc_vectors", "vec_id"),
+    )
+
+    def _drop_deleted(self) -> None:
+        """Point every doc-keyed frame at the index's live documents:
+        ONE anti-join over the frame as it stood before the first
+        delete, so repeated deletes replace the join instead of
+        stacking filters (a frame reassigned since is re-based on its
+        new value)."""
+        pre = self.__dict__.setdefault("_pre_delete", {})
+        for attr, key in self._DOC_KEYED:
+            cur = getattr(self, attr, None)
+            if cur is None:
+                continue
+            base, live = pre.get(attr, (cur, None))
+            if live is not cur:
+                base = cur
+            live = self._index._live(base, key)
+            pre[attr] = (base, live)
+            setattr(self, attr, live)
 
     # -- helpers ------------------------------------------------------------
     def _project(
@@ -3628,12 +3578,10 @@ class Top2VecSpark:
 
     def _validate_num_docs(self, num_docs: int) -> None:
         """Reference _validate_num_docs (top2vec.py:1363-1367) —
-        document_count from the cached bounds aggregate, no per-call
-        scan."""
+        the live document count from the cached bounds aggregate, no
+        per-call scan."""
         self._validate_num(num_docs, "num_docs")
         _, _, n, _ = self._doc_id_bounds()
-        if self._index is not None:
-            n -= len(self._index.tombstones)  # bounds are pre-delete
         if num_docs > n:
             raise ValueError(
                 f"num_docs cannot exceed the number of documents: {n}."
@@ -3708,12 +3656,13 @@ class Top2VecSpark:
                 delattr(self, attr)
 
     def _doc_id_bounds(self) -> tuple:
-        """(lo, hi, n, dense) of the ORIGINAL corpus ids, cached after
-        one column-pruned aggregate. Not invalidated by index-path
-        deletes on purpose: those only tombstone, so the valid set
-        stays 'original dense range minus tombstones'."""
+        """(lo, hi, n, dense) of the LIVE corpus ids, cached after one
+        column-pruned aggregate; n is the live document count. A
+        facade delete subtracts its ids from n in place and keeps lo,
+        hi and dense, which then reads "every id of [lo, hi] that is
+        not tombstoned is live"; compaction drops the cache."""
         if not hasattr(self, "_id_bounds"):
-            r = self.docs.agg(
+            r = self._live(self.docs).agg(
                 F.min("doc_id").alias("lo"),
                 F.max("doc_id").alias("hi"),
                 F.count("doc_id").alias("n"),

@@ -68,24 +68,6 @@ def _varint_nbytes(v: np.ndarray) -> np.ndarray:
     return np.maximum(1, (nbits + 6) // 7)
 
 
-def encode_varint_many(values: np.ndarray, counts) -> list:
-    """Encode many INDEPENDENT varint streams (e.g. one per posting
-    block) in ONE vectorized pass: varint streams are
-    self-terminating, so the concatenated encode is byte-sliced at
-    per-stream boundaries. Kills the per-block fixed cost of calling
-    encode_varint ~n_postings/128 times during an index build."""
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    counts = np.asarray(counts, dtype=np.int64)
-    if v.size == 0:
-        return [b""] * counts.size
-    blob = encode_varint(v)
-    nbytes = _varint_nbytes(v)
-    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    stream_bytes = np.add.reduceat(nbytes, starts)
-    offs = np.concatenate(([0], np.cumsum(stream_bytes)))
-    return [blob[offs[i] : offs[i + 1]] for i in range(counts.size)]
-
-
 def encode_gamma_many(values: np.ndarray, counts) -> list:
     """Encode many independent Elias-gamma streams in one pass. Each
     stream is padded to a byte boundary EXACTLY like an individual

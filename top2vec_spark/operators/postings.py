@@ -469,135 +469,5 @@ def build_postings_from_tf(
     return shuffled.mapInPandas(encode, POSTINGS_SCHEMA), n_encode_parts
 
 
-def encode_shard_partition(
-    pdfs,
-    vocab_map,  # dict term -> (term_id, df) (broadcast)
-    docs_per_shard: int,
-    block_size: int,
-    k1: float,
-    b: float,
-    n_docs: int,
-    avgdl: float,
-):
-    """mapInPandas kernel over PACKED tf rows repartitioned by shard:
-    each partition holds complete doc-shards; the kernel explodes
-    (numpy), maps terms -> term_ids via the broadcast vocab (C-level
-    pandas hash map), lexsorts by (term_id, doc_id) and encodes whole
-    (term, shard) runs locally.
-
-    This is the map-side-encode architecture of production index
-    builders: the big raw (doc, term, tf) relation NEVER shuffles —
-    only packed per-doc rows (once, by shard) and the compressed
-    blocks (by term bucket, ~30x smaller than raw rows) move."""
-    pdf = _concat(pdfs)
-    if pdf is None:
-        return
-
-    vm_terms = vocab_map["terms"]  # pd.Index of terms
-    vm_ids = vocab_map["ids"]  # np.int64 array aligned with vm_terms
-    vm_df = vocab_map["df"]  # np.int64 array aligned by term_id order
-
-    doc_ids_col = _int64(pdf, "doc_id")
-    dls_col = _int64(pdf, "dl")
-    lens = pdf["terms"].map(len).to_numpy().astype(np.int64)
-    flat_terms = pd.Index(
-        np.concatenate([np.asarray(t, dtype=object) for t in pdf["terms"]])
-    )
-    flat_tfs = np.concatenate([np.asarray(t, dtype=np.int64) for t in pdf["tfs"]])
-    doc_rep = np.repeat(doc_ids_col, lens)
-    dl_rep = np.repeat(dls_col, lens)
-    # term -> term_id (vectorized hash-join; -1 = filtered by min_count)
-    pos = vm_terms.get_indexer(flat_terms)
-    keep = pos >= 0
-    tid = np.where(keep, vm_ids[np.maximum(pos, 0)], -1)[keep]
-    doc_rep, dl_rep, flat_tfs = doc_rep[keep], dl_rep[keep], flat_tfs[keep]
-    shard_rep = doc_rep // docs_per_shard
-
-    order = np.lexsort((doc_rep, shard_rep, tid))
-    yield from _encode_scored(
-        tid[order],
-        shard_rep[order],
-        doc_rep[order],
-        flat_tfs[order],
-        dl_rep[order].astype(np.float64),
-        vm_df,
-        block_size,
-        k1,
-        b,
-        n_docs,
-        avgdl,
-    )
-
-
-def build_postings_from_packed(
-    packed: DataFrame,
-    vocab: DataFrame,
-    globs: CorpusGlobals,
-    cfg: BM25Config = BM25Config(),
-    docs_per_shard: int = DEFAULT_DOCS_PER_SHARD,
-    block_size: int = POSTING_BLOCK_SIZE,
-) -> DataFrame:
-    """Packed tf (doc_id, terms, tfs, dl) -> compressed postings.
-
-    ONE raw shuffle (packed rows by shard — a shard must live whole in
-    one partition) + map-side encode; the downstream bucket
-    repartition moves only compressed blocks. Vocabulary rides as a
-    broadcast (term -> term_id, df); falls back to
-    ``build_postings_from_tf`` when the vocab exceeds the cap.
-    """
-    spark = packed.sparkSession
-    VOCAB_BROADCAST_CAP = 5_000_000
-    if vocab.count() > VOCAB_BROADCAST_CAP:
-        from top2vec_spark.operators.tokens import explode_packed_tf
-
-        return build_postings_from_tf(
-            explode_packed_tf(packed), vocab, globs, cfg, docs_per_shard, block_size
-        )[0]
-
-    vrows = vocab.select("term", "term_id", "df").collect()
-    terms_idx = pd.Index([r["term"] for r in vrows])
-    ids = np.array([r["term_id"] for r in vrows], dtype=np.int64)
-    df_by_id = np.zeros(int(ids.max()) + 1 if len(ids) else 1, dtype=np.int64)
-    for r in vrows:
-        df_by_id[int(r["term_id"])] = int(r["df"])
-    bc = spark.sparkContext.broadcast(
-        {"terms": terms_idx, "ids": ids, "df": df_by_id}
-    )
-
-    k1, b, n_docs, avgdl = cfg.k1, cfg.b, globs.n_docs, globs.avgdl
-    n_parts = max(spark.sparkContext.defaultParallelism * 2, 8)
-    sharded = packed.repartition(
-        n_parts, (F.col("doc_id") / F.lit(docs_per_shard)).cast("int")
-    )
-
-    def encode(pdfs):
-        yield from encode_shard_partition(
-            pdfs, bc.value, docs_per_shard, block_size, k1, b, n_docs, avgdl
-        )
-
-    return sharded.mapInPandas(encode, POSTINGS_SCHEMA)
-
-
-def build_postings(
-    tokens: DataFrame,
-    vocab: DataFrame,
-    doc_stats: DataFrame,
-    globs: CorpusGlobals,
-    cfg: BM25Config = BM25Config(),
-    docs_per_shard: int = DEFAULT_DOCS_PER_SHARD,
-    block_size: int = POSTING_BLOCK_SIZE,
-) -> DataFrame:
-    """tokens(doc_id, pos, term) variant (tests / ad-hoc)."""
-    tf = (
-        tokens.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .join(doc_stats, "doc_id")
-        .select("doc_id", "term", "tf", "dl")
-    )
-    return build_postings_from_tf(
-        tf, vocab, globs, cfg, docs_per_shard, block_size
-    )[0]
-
-
 def bucket_col(term_col: str = "term_id", n_buckets: int = DEFAULT_N_BUCKETS):
     return F.pmod(F.col(term_col), F.lit(n_buckets)).cast("int")

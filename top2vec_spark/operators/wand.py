@@ -507,6 +507,62 @@ def make_multi_shard_kernel(
     return kernel
 
 
+def _plan(
+    spark: SparkSession,
+    index,
+    queries: dict,
+    globs: CorpusGlobals,
+    cfg: BM25Config,
+    exclude_doc_ids: Sequence[int],
+):
+    """Planning shared by :func:`wand_topk` and :func:`wand_topk_many`.
+    ``queries``: query_id -> list of (term, term_id, df, sign) tuples.
+    Returns ``(qinfos, blocks, kernel_kw)``: each query's term_id ->
+    (sign, idf), the posting blocks of every query term (bucket and
+    term pruned), and the kernel factories' arguments after
+    ``qinfo(s), k``."""
+    qinfos = {
+        qid: {
+            int(term_id): (
+                float(sign),
+                math.log(1.0 + (globs.n_docs - df + 0.5) / (df + 0.5)),
+            )
+            for _, term_id, df, sign in rows
+        }
+        for qid, rows in queries.items()
+    }
+    term_ids = sorted({t for qi in qinfos.values() for t in qi})
+    buckets = sorted({t % index.n_buckets for t in term_ids})
+    # bucketed serving table (PostingsIndex.register_bucketed): the
+    # scan's hash distribution on shard satisfies the kernel's
+    # groupBy, so the per-query Exchange of posting blocks is elided
+    src = (
+        spark.table(index.bucketed_table)
+        if getattr(index, "bucketed_table", None)
+        else index.postings
+    )
+    blocks = src.filter(
+        F.col("bucket").isin(buckets) & F.col("term_id").isin(term_ids)
+    )
+    # tombstoned docs (U2 deletes) are excluded exactly like
+    # query-side exclusions — skipped at scoring, never returned. The
+    # tombstone SET never rides in the closure: kernels side-read
+    # their own shard's partition (per-shard sidecar, like dl)
+    tomb_path = getattr(index, "tombstones_path", None)
+    kernel_kw = dict(
+        k1=cfg.k1,
+        b=cfg.b,
+        avgdl=globs.avgdl,
+        exclude=frozenset(int(x) for x in exclude_doc_ids),
+        stats_path=index.doc_stats_path,
+        fresh_stats=getattr(index, "stats_fresh", True),
+        build_id=getattr(index, "build_id", ""),
+        tomb_path=tomb_path,
+        tomb_version=tomb_fingerprint(tomb_path),
+    )
+    return qinfos, blocks, kernel_kw
+
+
 def wand_topk(
     spark: SparkSession,
     index,
@@ -527,46 +583,10 @@ def wand_topk(
     qrows = weights if isinstance(weights, list) else [
         (r["term"], r["term_id"], r["df"], r["sign"]) for r in weights.collect()
     ]
-    qinfo = {
-        int(term_id): (
-            float(sign),
-            math.log(1.0 + (globs.n_docs - df + 0.5) / (df + 0.5)),
-        )
-        for _, term_id, df, sign in qrows
-    }
-    term_ids = sorted(qinfo)
-    buckets = sorted({t % index.n_buckets for t in term_ids})
-
-    # bucketed serving table (PostingsIndex.register_bucketed): the
-    # scan's hash distribution on shard satisfies the groupBy below,
-    # so the per-query Exchange of posting blocks is elided entirely
-    src = (
-        spark.table(index.bucketed_table)
-        if getattr(index, "bucketed_table", None)
-        else index.postings
+    qinfos, blocks, kernel_kw = _plan(
+        spark, index, {"": qrows}, globs, cfg, exclude_doc_ids
     )
-    blocks = src.filter(
-        F.col("bucket").isin(buckets) & F.col("term_id").isin(term_ids)
-    )
-    # tombstoned docs (U2 deletes) are excluded exactly like
-    # query-side exclusions — skipped at scoring, never returned. The
-    # tombstone SET never rides in the closure: kernels side-read
-    # their own shard's partition (per-shard sidecar, like dl)
-    exclude = frozenset(int(x) for x in exclude_doc_ids)
-    tomb_path = getattr(index, "tombstones_path", None)
-    kernel = make_shard_kernel(
-        qinfo,
-        k,
-        cfg.k1,
-        cfg.b,
-        globs.avgdl,
-        exclude,
-        index.doc_stats_path,
-        fresh_stats=getattr(index, "stats_fresh", True),
-        build_id=getattr(index, "build_id", ""),
-        tomb_path=tomb_path,
-        tomb_version=tomb_fingerprint(tomb_path),
-    )
+    kernel = make_shard_kernel(qinfos[""], k, **kernel_kw)
     per_shard = blocks.groupBy("shard").applyInPandas(
         lambda pdf: kernel(pdf), "doc_id long, score double"
     )
@@ -597,41 +617,15 @@ def wand_topk_many(
     """
     from pyspark.sql import Window as W
 
-    qinfos = {
-        str(qid): {
-            int(term_id): (
-                float(sign),
-                math.log(1.0 + (globs.n_docs - df + 0.5) / (df + 0.5)),
-            )
-            for _, term_id, df, sign in rows
-        }
-        for qid, rows in queries.items()
-    }
-    term_ids = sorted({t for qi in qinfos.values() for t in qi})
-    buckets = sorted({t % index.n_buckets for t in term_ids})
-    src = (
-        spark.table(index.bucketed_table)
-        if getattr(index, "bucketed_table", None)
-        else index.postings
+    qinfos, blocks, kernel_kw = _plan(
+        spark,
+        index,
+        {str(qid): rows for qid, rows in queries.items()},
+        globs,
+        cfg,
+        exclude_doc_ids,
     )
-    blocks = src.filter(
-        F.col("bucket").isin(buckets) & F.col("term_id").isin(term_ids)
-    )
-    exclude = frozenset(int(x) for x in exclude_doc_ids)
-    tomb_path = getattr(index, "tombstones_path", None)
-    kernel = make_multi_shard_kernel(
-        qinfos,
-        k,
-        cfg.k1,
-        cfg.b,
-        globs.avgdl,
-        exclude,
-        index.doc_stats_path,
-        fresh_stats=getattr(index, "stats_fresh", True),
-        build_id=getattr(index, "build_id", ""),
-        tomb_path=tomb_path,
-        tomb_version=tomb_fingerprint(tomb_path),
-    )
+    kernel = make_multi_shard_kernel(qinfos, k, **kernel_kw)
     per_shard = blocks.groupBy("shard").applyInPandas(
         lambda pdf: kernel(pdf), "query_id string, doc_id long, score double"
     )

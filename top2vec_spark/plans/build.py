@@ -219,11 +219,11 @@ class PostingsIndex:
         rebuild compacts (documented, matches the reference which
         also does not retrain after deletes).
 
-        NOTE: this is a driver-side materialization used by id
-        VALIDATION only — the query hot path never touches it; WAND
-        kernels side-read the shard-partitioned tombstone sidecar
-        (operators/wand._load_tomb_sidecar) so the exclusion set never
-        rides in a task closure."""
+        A driver-side set for id validation and over-fetch sizing
+        only; no query plan carries its ids. Queries drop deleted docs
+        through :meth:`_live` (an anti-join) or, in the WAND kernels,
+        by side-reading their shard's partition of the tombstone table
+        (operators/wand._load_tomb_sidecar)."""
         if not hasattr(self, "_tombstones"):
             tpath = f"{self.path}/tombstones"
             if os.path.isdir(tpath):
@@ -236,6 +236,39 @@ class PostingsIndex:
     @property
     def tombstones_path(self) -> str:
         return f"{self.path}/tombstones"
+
+    def _tomb_frame(self) -> DataFrame | None:
+        """The deleted doc_ids as a lazy local checkpoint, None when
+        nothing is deleted (no job runs then). Rebuilt only when the
+        tombstone file set changes (``wand.tomb_fingerprint``). A
+        checkpoint rather than a scan of ``tombstones/``, because
+        compaction deletes that directory."""
+        from top2vec_spark.operators.wand import tomb_fingerprint
+
+        fp = tomb_fingerprint(self.tombstones_path)
+        if not fp:
+            return None
+        if getattr(self, "_tomb_ids", (None,))[0] != fp:
+            # the schema is known: no footer-reading inference job
+            ids = (
+                self.spark.read.schema("doc_id long, shard int")
+                .parquet(self.tombstones_path)
+                .select("doc_id")
+            )
+            self._tomb_ids = (fp, ids.localCheckpoint(eager=False))
+        return self._tomb_ids[1]
+
+    def _live(self, df: DataFrame, on: str = "doc_id") -> DataFrame:
+        """``df`` without its deleted documents: a left anti-join on
+        ``on`` against :meth:`_tomb_frame` (AQE broadcasts the small
+        side), or ``df`` itself when nothing is deleted. No plan
+        carries an id list."""
+        tombs = self._tomb_frame()
+        if tombs is None:
+            return df
+        if on != "doc_id":
+            tombs = tombs.withColumnRenamed("doc_id", on)
+        return df.join(tombs, on, "left_anti")
 
     def _migrate_flat_tombstones(self) -> None:
         """One-time migration of a pre-sidecar tombstone table (flat
@@ -951,11 +984,7 @@ class IndexBuilder:
 
         if not (resume and self._done("postings")):
             # JVM explode + repartition-by-(term,shard): Tungsten owns
-            # the 90M-row sort/shuffle. The alternative map-side-encode
-            # kernel (build_postings_from_packed) shuffles 30x fewer
-            # bytes but pays Arrow list<string> -> Python object
-            # materialization — a win on network-shuffle clusters, a
-            # loss on this single box (measured).
+            # the sort/shuffle.
             postings, n_parts = build_postings_from_tf(
                 explode_packed_tf(packed_t),
                 vocab_t,
