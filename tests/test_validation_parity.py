@@ -119,7 +119,7 @@ def test_num_docs_negative_message(engine, a_term):
 
 
 def test_num_docs_exceeds_message(engine, a_term):
-    n = engine._doc_id_bounds()[2]
+    n = engine._doc_id_bounds()[1]
     with pytest.raises(
         ValueError,
         match=rf"num_docs cannot exceed the number of documents: {n}\.",

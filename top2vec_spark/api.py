@@ -20,6 +20,7 @@ tie order (we fix score DESC, doc_id ASC).
 
 from __future__ import annotations
 
+from bisect import bisect_left, bisect_right
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,6 +35,7 @@ from top2vec_spark.operators.corpus_stats import (
     build_vocab,
     compute_globals,
 )
+from top2vec_spark.operators.postings import DEFAULT_DOCS_PER_SHARD
 from top2vec_spark.operators.tokens import tokenize_docs
 
 
@@ -3424,9 +3426,8 @@ class Top2VecSpark:
             self._index.delete_documents(doc_ids)
             self._drop_deleted()
             if hasattr(self, "_id_bounds"):  # validated: every id was live
-                lo, hi, n, dense = self._id_bounds
-                n -= len({int(i) for i in doc_ids})
-                self._id_bounds = (lo, hi, n, dense)
+                runs, n = self._id_bounds
+                self._id_bounds = (runs, n - len({int(i) for i in doc_ids}))
             if hasattr(self, "doc_topic"):  # A5: sizes shrink in place
                 self._invalidate_topic_caches()
             # ANN index: tombstone, not rebuild (hnswlib mark_deleted
@@ -3581,7 +3582,7 @@ class Top2VecSpark:
         the live document count from the cached bounds aggregate, no
         per-call scan."""
         self._validate_num(num_docs, "num_docs")
-        _, _, n, _ = self._doc_id_bounds()
+        _, n = self._doc_id_bounds()
         if num_docs > n:
             raise ValueError(
                 f"num_docs cannot exceed the number of documents: {n}."
@@ -3656,53 +3657,71 @@ class Top2VecSpark:
                 delattr(self, attr)
 
     def _doc_id_bounds(self) -> tuple:
-        """(lo, hi, n, dense) of the LIVE corpus ids, cached after one
-        column-pruned aggregate; n is the live document count. A
-        facade delete subtracts its ids from n in place and keeps lo,
-        hi and dense, which then reads "every id of [lo, hi] that is
-        not tombstoned is live"; compaction drops the cache."""
+        """(runs, n) of the LIVE corpus ids, cached after one
+        column-pruned aggregate grouped by doc shard: ``runs`` is one
+        (lo, hi, dense) per shard, sorted by lo, and n is the live
+        document count. A run is dense when every id of [lo, hi] is
+        live or tombstoned; appended ids start at the next shard
+        boundary, so per-shard runs stay dense where the whole id range
+        does not. A facade delete subtracts its ids from n in place
+        (they become tombstones, so each run's dense flag still holds);
+        compaction drops the cache."""
         if not hasattr(self, "_id_bounds"):
-            r = self._live(self.docs).agg(
-                F.min("doc_id").alias("lo"),
-                F.max("doc_id").alias("hi"),
-                F.count("doc_id").alias("n"),
-            ).collect()[0]
-            lo, hi, n = r["lo"], r["hi"], r["n"]
-            dense = lo is not None and (int(hi) - int(lo) + 1 == int(n))
-            self._id_bounds = (lo, hi, int(n), dense)
+            idx = self._index
+            dps = DEFAULT_DOCS_PER_SHARD if idx is None else idx.docs_per_shard
+            rows = (
+                self._live(self.docs)
+                .groupBy(F.expr(f"doc_id div {int(dps)}").alias("shard"))
+                .agg(
+                    F.min("doc_id").alias("lo"),
+                    F.max("doc_id").alias("hi"),
+                    F.count("doc_id").alias("n"),
+                )
+                .collect()
+            )
+            runs, tombs = [], None
+            for r in sorted(rows, key=lambda r: r["lo"]):
+                lo, hi = int(r["lo"]), int(r["hi"])
+                holes = hi - lo + 1 - int(r["n"])
+                if holes and idx is not None:  # tombstones read only here
+                    tombs = sorted(idx.tombstones) if tombs is None else tombs
+                    holes -= bisect_right(tombs, hi) - bisect_left(tombs, lo)
+                runs.append((lo, hi, holes == 0))
+            self._id_bounds = (runs, sum(int(r["n"]) for r in rows))
         return self._id_bounds
 
     def _validate_doc_ids(self, ids: Sequence[int]) -> None:
-        """Existence check without a per-call corpus scan: dense-id
-        corpora (the assign_doc_ids contract) validate driver-side
-        against cached bounds + tombstones — zero jobs on the hot path
-        of search_documents_by_documents / get_documents_topics /
-        delete_documents. Non-dense corpora fall back to a pushed
-        isin probe. Message parity: reference _validate_doc_ids
-        (top2vec.py:1404-1418)."""
+        """Existence check without a per-call corpus scan: each id is
+        checked driver-side against its shard's cached run
+        (:meth:`_doc_id_bounds`) and the tombstones, so dense-id shards
+        (the assign_doc_ids contract, appends included) cost zero jobs
+        on the hot path of search_documents_by_documents /
+        get_documents_topics / delete_documents. Ids that fall in a
+        non-dense run go to one pushed isin probe. Message parity:
+        reference _validate_doc_ids (top2vec.py:1404-1418)."""
         uniq = {int(i) for i in ids}
         if not uniq:
             return
-        lo, hi, n, dense = self._doc_id_bounds()
-        if dense:
-            tombs = (
-                self._index.tombstones
-                if self._index is not None
-                else frozenset()
-            )
-            for i in sorted(uniq):
-                if not (lo <= i <= hi) or i in tombs:
-                    raise ValueError(f"{i} is not a valid document id.")
-            return
-        found = {
-            r["doc_id"]
-            for r in self.docs.select("doc_id")
-            .filter(F.col("doc_id").isin(list(uniq)))
-            .collect()
-        }
-        missing = sorted(uniq - found)
-        if missing:
-            raise ValueError(f"{missing[0]} is not a valid document id.")
+        runs, _ = self._doc_id_bounds()
+        tombs = self._index.tombstones if self._index is not None else frozenset()
+        los = [lo for lo, _, _ in runs]
+        bad, probe = [], []
+        for i in uniq:
+            k = bisect_right(los, i) - 1
+            if k < 0 or i > runs[k][1] or i in tombs:
+                bad.append(i)
+            elif not runs[k][2]:
+                probe.append(i)
+        if probe:
+            found = {
+                r["doc_id"]
+                for r in self.docs.select("doc_id")
+                .filter(F.col("doc_id").isin(probe))
+                .collect()
+            }
+            bad += [i for i in probe if i not in found]
+        if bad:
+            raise ValueError(f"{min(bad)} is not a valid document id.")
 
     def _doc_terms(self, ids: Sequence[int]) -> list[str]:
         """Distinct terms of the given docs. Filters the doc TABLE

@@ -467,10 +467,14 @@ def make_multi_shard_kernel(
 ):
     """Batched-serving kernel: MANY queries against one shard in one
     pass. Term structs and block decodes are shared across queries —
-    a block touched by Q queries is decoded once, and the per-query
-    job-scheduling overhead (the dominant cost of a warm single query
-    on a cluster) is amortized across the whole batch. Emits
-    (query_id, doc_id, score) with <= k rows per (query, shard)."""
+    a block touched by Q queries is decoded once, and the fixed
+    per-query cost is amortized across the whole batch. That cost, not
+    the kernel (~0.01 s), is the floor of a warm single query. On a
+    4-core host it is a JVM job of about 0.07 s plus the dispatch of
+    the Python task that runs the kernel, ~0.05 s once
+    ``session.gate_zip_invalidation`` stops each task re-reading the
+    worker's zip archives (~0.26 s before). Emits (query_id, doc_id,
+    score) with <= k rows per (query, shard)."""
 
     def kernel(blocks_pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
@@ -608,9 +612,10 @@ def wand_topk_many(
     <= k rows per query, each ordered (score DESC, doc_id ASC) and
     rank/score-identical to per-query wand_topk (pytest-pinned).
 
-    Why this exists: a warm single query costs one full job schedule
-    (~0.3 s locally, more on a busy cluster) regardless of data size.
-    A serving/offline-eval workload with hundreds of queries pays that
+    Why this exists: a warm single query pays a fixed floor regardless
+    of data size, the JVM job plus the Python task dispatch (see
+    :func:`make_multi_shard_kernel`), more on a busy cluster. A
+    serving/offline-eval workload with hundreds of queries pays that
     once here — the shard kernel shares block decodes across queries,
     the scan unions all terms' partition filters, and the final
     per-query top-k is one window over <= k * shards * |Q| tiny rows.

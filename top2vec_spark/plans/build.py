@@ -1184,10 +1184,7 @@ def compact_index(
     cfg = cfg or BM25Config(k1=gj.get("k1", 1.2), b=gj.get("b", 0.75))
     state = _src_state()
 
-    surviving = src.packed_tf.select("doc_id", "terms", "tfs", "dl")
-    if state["tombstones"][0]:
-        tomb = spark.read.parquet(src.tombstones_path).select("doc_id")
-        surviving = surviving.join(tomb, "doc_id", "left_anti")
+    surviving = src._live(src.packed_tf.select("doc_id", "terms", "tfs", "dl"))
 
     builder = IndexBuilder(
         spark,

@@ -9,8 +9,35 @@ these configs are safe cluster-side too.
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
+
+
+def gate_zip_invalidation() -> None:
+    """Re-read a zip archive's directory on ``invalidate_caches`` only
+    when its ``(st_mtime_ns, st_size)`` stamp changed or ``os.stat``
+    fails. PySpark invalidates before every Python task; before 3.12
+    (gh-103200) each ``zipimporter`` on a worker's ``sys.path``
+    (pyspark.zip, py4j, the Spark jar) then re-parses its archive in
+    pure Python, 0.16-0.24 s per task. Idempotent; no-op on >= 3.12."""
+    reread = zipimport.zipimporter.invalidate_caches
+    if sys.version_info >= (3, 12) or getattr(reread, "stat_gated", False):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_dir_stamp", None):
+            reread(self)
+            self._dir_stamp = stamp
+
+    invalidate_caches.stat_gated = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def get_spark(
