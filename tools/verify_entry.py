@@ -14,10 +14,16 @@ exactly the `sessions_by_user` driver failure.)"""
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# the Python workers Spark starts import the package too
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import duckdb
 
@@ -65,6 +71,7 @@ def driver_canon_check(table):
 
 
 def main():
+    wall0 = time.time()
     spark = get_spark(parallelism=8, app_name="verify_entry")
     con = duckdb.connect()
     for t in TABLES:
@@ -82,6 +89,7 @@ def main():
         print(f"valid names: {sorted(qs)}")
         sys.exit(2)
     failures = 0
+    walls = {}  # row name -> wall seconds
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
             continue
@@ -93,6 +101,7 @@ def main():
             print(
                 f"{name:24s} rows={stab.num_rows:6d}  (no oracle, rows-only) {elapsed:.1f}s"
             )
+            walls[name] = time.time() - t0
             continue
         dtab = con.sql(oracles[name]).arrow()
         try:
@@ -124,12 +133,17 @@ def main():
                 drows = sorted(repr(tuple(d.values())) for d in dtab.to_pylist())
                 print("  spark :", srows[:10])
                 print("  duckdb:", drows[:10])
+        walls[name] = time.time() - t0
 
     if not ONLY:
         # smoke entry()
         e = entrymod.entry(spark)
         n = e.count()
         print(f"entry() rows={n} schema={e.schema.simpleString()}")
+    # a row's wall time covers the Spark run, the DuckDB oracle and the checks
+    print(f"total wall {time.time() - wall0:.1f}s, {len(walls)} rows")
+    slow = sorted(walls.items(), key=lambda kv: -kv[1])[:5]
+    print("slowest rows: " + ", ".join(f"{k} {v:.1f}s" for k, v in slow))
     sys.exit(1 if failures else 0)
 
 

@@ -92,6 +92,9 @@ class Top2VecSpark:
         self.cfg = cfg
         self.keep_documents = keep_documents
         self.docs = docs
+        # what ``tokens`` come from: a facade delete leaves it as
+        # constructed; compaction points it at the survivors
+        self._corpus = docs
         self.min_count = min_count
         self.index_path = index_path
         self.ascii_fast_path = ascii_fast_path
@@ -104,35 +107,108 @@ class Top2VecSpark:
         # (top2vec.py __init__ stores embedding_model_path; 1846-1870
         # mutate it) — None means "callable uses its own default".
         self.embedding_model_path: str | None = None
-        self._derive_corpus_tables()
 
-    def _derive_corpus_tables(self) -> None:
-        """(Re)compute the engine-level corpus derivations
-        (tokens -> optional phrase augmentation -> vocab/doc_stats,
-        globals reset to lazy) from the CURRENT ``self.docs``. Shared
-        by __init__ and compact_index — after a compaction the
-        surviving corpus is the new ground truth and every engine
-        table must agree with the index's recomputed statistics."""
-        self.tokens = tokenize_docs(
-            self.docs,
+    def _like(self, docs: DataFrame) -> "Top2VecSpark":
+        """A new engine over ``docs`` with this engine's settings."""
+        return Top2VecSpark(
+            self.spark,
+            docs,
+            min_count=self.min_count,
+            cfg=self.cfg,
+            keep_documents=self.keep_documents,
             ascii_fast_path=self.ascii_fast_path,
             tokenizer=self.tokenizer,
+            ngram_vocab=self.ngram_vocab,
+            phrase_min_count=self._phrase_min_count,
+            phrase_threshold=self._phrase_threshold,
         )
-        if self.ngram_vocab:
-            from top2vec_spark.operators.phrases import (
-                find_phrases,
-                tokens_with_phrases,
-            )
 
-            self.phrases = find_phrases(
-                self.tokens,
+    # -- corpus statistics ---------------------------------------------------
+    # One rule: with an index, N/avgdl (``globals``), df (``vocab``) and
+    # dl (``doc_stats``) are the index's — pre-delete until
+    # compact_index, identical across save/load. Without one they derive
+    # from ``tokens`` on first read. Nothing runs at construction;
+    # ``tokens`` and ``doc_stats`` are assignable (e.g. to cached copies).
+    @property
+    def _index(self):
+        return self.__dict__.get("_idx")
+
+    @_index.setter
+    def _index(self, idx) -> None:
+        # the one place an engine's index changes (build, compaction,
+        # append, load): every table cached from the old one goes
+        self.__dict__["_idx"] = idx
+        for key in ("_vocab", "_doc_stats", "_globals", "_vocab_map", "_id_bounds"):
+            self.__dict__.pop(key, None)
+
+    def _tokenize(self, docs: DataFrame, phrases: bool = True) -> DataFrame:
+        """``docs`` tokenized the way the index's terms were: this
+        engine's tokenizer, then :attr:`phrases` with ``ngram_vocab``."""
+        toks = tokenize_docs(
+            docs, ascii_fast_path=self.ascii_fast_path, tokenizer=self.tokenizer
+        )
+        if phrases and self.ngram_vocab:
+            from top2vec_spark.operators.phrases import tokens_with_phrases
+
+            toks = tokens_with_phrases(toks, self.phrases)
+        return toks
+
+    @property
+    def tokens(self) -> DataFrame:
+        if "_tokens" not in self.__dict__:
+            self._tokens = self._tokenize(self._corpus)
+        return self._tokens
+
+    @tokens.setter
+    def tokens(self, df: DataFrame) -> None:
+        self._tokens = df
+
+    @property
+    def phrases(self) -> DataFrame:
+        """Bigram phrases mined from the constructing corpus; an
+        indexed engine's :meth:`add_documents` result keeps its
+        source's, as the index does."""
+        if "_phrases" not in self.__dict__:
+            from top2vec_spark.operators.phrases import find_phrases
+
+            self._phrases = find_phrases(
+                self._tokenize(self._corpus, phrases=False),
                 min_count=self._phrase_min_count,
                 threshold=self._phrase_threshold,
             ).cache()
-            self.tokens = tokens_with_phrases(self.tokens, self.phrases)
-        self.vocab = build_vocab(self.tokens, min_count=self.min_count)
-        self.doc_stats = build_doc_stats(self.tokens)
-        self._globals: CorpusGlobals | None = None
+        return self._phrases
+
+    @property
+    def vocab(self) -> DataFrame:
+        if "_vocab" not in self.__dict__:
+            self._vocab = (
+                build_vocab(self.tokens, min_count=self.min_count).cache()
+                if self._index is None
+                else self._index.vocab
+            )
+        return self._vocab
+
+    @property
+    def doc_stats(self) -> DataFrame:
+        if "_doc_stats" not in self.__dict__:
+            self._doc_stats = (
+                build_doc_stats(self.tokens).cache()
+                if self._index is None
+                else self._index.doc_stats.select("doc_id", "dl")
+            )
+        return self._doc_stats
+
+    @doc_stats.setter
+    def doc_stats(self, df: DataFrame) -> None:
+        self._doc_stats = df
+
+    @property
+    def globals(self) -> CorpusGlobals:
+        if self._index is not None:
+            return self._index.globs
+        if "_globals" not in self.__dict__:
+            self._globals = compute_globals(self.doc_stats)
+        return self._globals
 
     @classmethod
     def from_pages(
@@ -158,16 +234,6 @@ class Top2VecSpark:
         )
         return cls(spark, docs, **kwargs)
 
-    # -- lazy cached globals ------------------------------------------------
-    @property
-    def globals(self) -> CorpusGlobals:
-        if self._globals is None:
-            # cache the small stats tables: reused by every query
-            self.vocab = self.vocab.cache()
-            self.doc_stats = self.doc_stats.cache()
-            self._globals = compute_globals(self.doc_stats)
-        return self._globals
-
     def build_index(
         self,
         path: str | None = None,
@@ -177,12 +243,13 @@ class Top2VecSpark:
         **builder_kwargs,
     ):
         """Build the compressed postings index (checkpoint-resumable).
-        Returns the PostingsIndex; queries automatically use WAND once
-        built. ``input_fingerprint`` ties resume markers to the input
-        data identity (plans/build.IndexBuilder). ``store_positions``
-        also writes the positional sidecar (operators/positional.py),
-        after which phrase/proximity/query-language searches read
-        directory-pruned postings instead of re-tokenizing."""
+        Returns the PostingsIndex; once built, queries use WAND and the
+        engine's statistics are the index's. ``input_fingerprint`` ties
+        resume markers to the input data identity
+        (plans/build.IndexBuilder). ``store_positions`` also writes
+        the positional sidecar (operators/positional.py), after which
+        phrase/proximity/query-language searches read directory-pruned
+        postings instead of re-tokenizing."""
         from top2vec_spark.plans.build import IndexBuilder
 
         builder = IndexBuilder(
@@ -195,8 +262,6 @@ class Top2VecSpark:
         self._index = builder.build(
             self.tokens, min_count=self.min_count, resume=resume
         )
-        if hasattr(self, "_vocab_map"):
-            del self._vocab_map  # re-derive from the built index vocab
         if store_positions:
             self.build_position_sidecar()
         return self._index
@@ -209,7 +274,7 @@ class Top2VecSpark:
         raw-tokens plans."""
         from top2vec_spark.operators.positional import build_position_index
 
-        if getattr(self, "_index", None) is None:
+        if self._index is None:
             raise ValueError("no index — build_index first")
         build_position_index(
             self.tokens,
@@ -224,7 +289,7 @@ class Top2VecSpark:
         bumps it, so a stale sidecar never serves)."""
         from top2vec_spark.operators.positional import position_index_meta
 
-        idx = getattr(self, "_index", None)
+        idx = self._index
         if idx is None:
             return False
         meta = position_index_meta(idx.path)
@@ -248,14 +313,12 @@ class Top2VecSpark:
         """``df`` without the index's deleted documents
         (PostingsIndex._live: one anti-join, or ``df`` itself when
         nothing is deleted or no index is built)."""
-        idx = getattr(self, "_index", None)
-        return df if idx is None else idx._live(df)
+        return df if self._index is None else self._index._live(df)
 
     def _n_deleted(self) -> int:
         """Tombstone count — sizes the over-fetch of the top-k
         operators that drop deleted docs after ranking."""
-        idx = getattr(self, "_index", None)
-        return 0 if idx is None else len(idx.tombstones)
+        return 0 if self._index is None else len(self._index.tombstones)
 
     def _exclude_tombstones(self, result: DataFrame, k: int, order) -> DataFrame:
         """Post-delete consistency for positional queries (which have
@@ -277,12 +340,11 @@ class Top2VecSpark:
         is the new ground truth: ``self.docs`` drops any doc_id the
         index had tombstoned (the anti-join of :meth:`_drop_deleted` —
         correct even for deletes registered on the raw index rather
-        than through api.delete_documents), and every
-        engine-level derivation (tokens, vocab, doc_stats, globals,
-        driver vocab map) is re-derived so the brute fallback, the
-        WAND path (which passes ``self.globals``), and validation all
-        agree with the index's recomputed survivor statistics."""
-        if getattr(self, "_index", None) is None:
+        than through api.delete_documents), ``tokens`` derive from
+        those survivors, and the engine's statistics are the compacted
+        index's survivor statistics — the point where deletes stop
+        counting in N, avgdl, df and dl."""
+        if self._index is None:
             raise ValueError("no index — build_index first")
         self._drop_deleted()
         tombs = self._index._tomb_frame()
@@ -294,13 +356,10 @@ class Top2VecSpark:
             min_count=self.min_count, cfg=self.cfg
         )
         # the compacted index has no tombstones: the next delete
-        # anti-joins the frames as they stand now, and the id bounds
-        # (whose dense flag read "range minus tombstones") recompute
+        # anti-joins the frames as they stand now
         self.__dict__.pop("_pre_delete", None)
-        self.__dict__.pop("_id_bounds", None)
-        self._derive_corpus_tables()
-        if hasattr(self, "_vocab_map"):
-            del self._vocab_map
+        self._corpus = self.docs
+        self.__dict__.pop("_tokens", None)
         return self._index
 
     # -- queries ------------------------------------------------------------
@@ -313,7 +372,7 @@ class Top2VecSpark:
         None when the vocabulary exceeds the driver cap — queries then
         fall back to a filtered collect."""
         if not hasattr(self, "_vocab_map"):
-            src = self._index.vocab if self._index is not None else self.vocab
+            src = self.vocab
             if src.count() <= self._VOCAB_DRIVER_CAP:
                 self._vocab_map = {
                     r["term"]: (r["term_id"], r["df"]) for r in src.collect()
@@ -487,16 +546,7 @@ class Top2VecSpark:
         if not isinstance(query, str):
             raise ValueError("Query needs to be a string.")
         toks = reference_tokenize(query)
-        lookup = self.vocab_map
-        if lookup is not None:  # zero-job planning path
-            known = {t for t in set(toks) if t in lookup}
-        else:
-            known = {
-                r["term"]
-                for r in self.vocab.filter(
-                    F.col("term").isin(list(set(toks)))
-                ).collect()
-            }
+        known = self._known_terms(toks)
         terms = [t for t in toks if t in known]
         if not terms:
             raise ValueError("no query tokens found in vocabulary")
@@ -575,7 +625,7 @@ class Top2VecSpark:
             search_after is None
             and sort is None
             and min_should_match is None
-            and getattr(self, "_index", None) is not None
+            and self._index is not None
         ):
             plain = self._plain_query_terms(query)
             if plain is not None:
@@ -1103,7 +1153,7 @@ class Top2VecSpark:
         # lineage (JVM explode, already-distinct (doc, term) rows),
         # else the lazy re-tokenize plan (no index — the only case
         # that still scans raw text)
-        idx = getattr(self, "_index", None)
+        idx = self._index
         if self._sidecar_fresh():
             from top2vec_spark.operators.positional import POSITIONS_SUBDIR
 
@@ -1174,11 +1224,7 @@ class Top2VecSpark:
                 "num_docs cannot exceed window_size (the rescore "
                 "window bounds the result)"
             )
-        plain = (
-            self._plain_query_terms(query)
-            if getattr(self, "_index", None) is not None
-            else None
-        )
+        plain = self._index and self._plain_query_terms(query)
         if plain is not None:
             # index-speed first pass: a plain first query rides the
             # SAME block-max WAND routing as search() (rank/score
@@ -1443,18 +1489,13 @@ class Top2VecSpark:
         # tokenize ONLY the fetched top docs (the lazy `tokens`
         # relation would re-run the tokenizer UDF over the whole
         # corpus per query): semi-join the doc table first so the
-        # expensive UDF sees <= max(50, k) rows
-        top_tokens = tokenize_docs(
+        # expensive UDF sees <= max(50, k) rows (phrases stay rankable
+        # as words)
+        top_tokens = self._tokenize(
             self.docs.join(
                 F.broadcast(top_docs.select("doc_id")), "doc_id", "left_semi"
-            ),
-            ascii_fast_path=self.ascii_fast_path,
-            tokenizer=self.tokenizer,
+            )
         )
-        if self.ngram_vocab:  # phrases stay rankable as words
-            from top2vec_spark.operators.phrases import tokens_with_phrases
-
-            top_tokens = tokens_with_phrases(top_tokens, self.phrases)
         cooc = (
             top_tokens.join(
                 F.broadcast(top_docs.select("doc_id", F.col("score").alias("dscore"))),
@@ -1927,17 +1968,8 @@ class Top2VecSpark:
             raise ValueError("no doc2vec model — train_doc2vec first")
         from top2vec_spark.operators.doc2vec import infer_doc_vectors
 
-        toks = tokenize_docs(
-            docs,
-            ascii_fast_path=self.ascii_fast_path,
-            tokenizer=self.tokenizer,
-        )
-        if self.ngram_vocab:
-            from top2vec_spark.operators.phrases import tokens_with_phrases
-
-            toks = tokens_with_phrases(toks, self.phrases)
         return infer_doc_vectors(
-            self._doc2vec_model, toks, epochs=epochs, alpha=alpha
+            self._doc2vec_model, self._tokenize(docs), epochs=epochs, alpha=alpha
         )
 
     def export_doc2vec_corpus(
@@ -2160,17 +2192,8 @@ class Top2VecSpark:
         self._require_topics(reduced)
         self._validate_num_topics(num_topics, reduced)
         toks = reference_tokenize(query)
-        lookup = self.vocab_map
-        if lookup is not None:
-            terms = [t for t in toks if t in lookup]
-        else:
-            known = {
-                r["term"]
-                for r in self.vocab.filter(
-                    F.col("term").isin(list(set(toks)))
-                ).collect()
-            }
-            terms = [t for t in toks if t in known]
+        known = self._known_terms(toks)
+        terms = [t for t in toks if t in known]
         if not terms:
             raise ValueError("no query tokens found in vocabulary")
         src = self._ctfidf_reduced if reduced else self._ctfidf
@@ -2322,7 +2345,7 @@ class Top2VecSpark:
         hnswlib indexes to bytes, the engine's state already IS
         tables, so save writes them as parquet under ``path``:
 
-        - ``docs`` (the corpus — every derivation recomputes from it)
+        - ``docs`` (the corpus ``tokens`` derive from)
         - topic layer: ``doc_topic``, ``topic_centroids``,
           ``topic_embeddings`` (+ ``doc_vectors`` only when set to a
           different table)
@@ -2333,9 +2356,11 @@ class Top2VecSpark:
         - the lexical WAND index by PATH REFERENCE in the manifest
           (its tables already live at their own ``index_path``)
 
-        Deterministically-derived state (tokens, vocab, doc_stats,
-        tf, c-TF-IDF, topic words) is recomputed on load, not stored
-        twice. Reference parity on callables: the reference nulls the
+        With an index, statistics are the index's, so the loaded engine
+        scores exactly like the saved one. Derived state (tokens, tf,
+        c-TF-IDF, topic words; statistics without an index) recomputes
+        on load, not stored twice. Reference parity on callables: the
+        reference nulls the
         un-picklable embed functions before dumping and the user
         re-attaches after load (top2vec.py:899-918) — same contract
         here for ``tokenizer`` / ``embedding_model`` /
@@ -2357,9 +2382,7 @@ class Top2VecSpark:
             "phrase_min_count": self._phrase_min_count,
             "phrase_threshold": self._phrase_threshold,
             "requires_tokenizer": self.tokenizer is not None,
-            "index_path": self._index.path
-            if getattr(self, "_index", None) is not None
-            else None,
+            "index_path": self._index and self._index.path,
         }
         self.docs.write.mode("overwrite").parquet(f"{path}/docs")
         if hasattr(self, "doc_topic"):
@@ -2408,12 +2431,12 @@ class Top2VecSpark:
     ) -> "Top2VecSpark":
         """S4 — the reference's full-model load (Top2Vec.load +
         _load_document_embedder_model, top2vec.py:945-1012): rebuild
-        the engine from a :meth:`save` directory. Corpus derivations
-        (tokens/vocab/doc_stats) recompute in ``__init__``; stored
-        topic tables re-attach; derived c-TF-IDF / topic-words /
-        reduced-words recompute deterministically from them; ANN
-        indexes rehydrate via :meth:`load_ann_indexes`; the lexical
-        index re-attaches from its recorded ``index_path``. User
+        the engine from a :meth:`save` directory. The lexical index
+        re-attaches from its recorded ``index_path``, statistics
+        included (the saved engine's exactly); stored topic tables
+        re-attach; derived c-TF-IDF / topic-words / reduced-words
+        recompute deterministically from them; ANN indexes rehydrate
+        via :meth:`load_ann_indexes`. User
         callables are NOT in the save (reference contract): pass the
         same ``tokenizer`` the model was built with (enforced via the
         manifest), and re-attach embedding hooks with
@@ -3258,20 +3281,20 @@ class Top2VecSpark:
             cache[key] = int(row["d"]) if row else 0
         return cache[key]
 
+    def _known_terms(self, words: Sequence[str]) -> set:
+        """The vocabulary terms among ``words``: on the driver from
+        :attr:`vocab_map`, else (over its cap) one filtered collect."""
+        lookup = self.vocab_map
+        if lookup is not None:
+            return {w for w in words if w in lookup}
+        vocab = self.vocab.filter(F.col("term").isin(list(set(words))))
+        return {r["term"] for r in vocab.collect()}
+
     def _validate_keywords(self, words: Sequence[str]) -> None:
         """Reference _validate_keywords (top2vec.py:1420-1432):
         unknown words raise."""
-        lookup = self.vocab_map
-        if lookup is not None:
-            missing = [w for w in words if w not in lookup]
-        else:
-            found = {
-                r["term"]
-                for r in self.vocab.filter(
-                    F.col("term").isin(list(set(words)))
-                ).collect()
-            }
-            missing = [w for w in words if w not in found]
+        known = self._known_terms(words)
+        missing = [w for w in words if w not in known]
         if missing:
             # reference message format (top2vec.py:1438-1441)
             raise ValueError(
@@ -3291,7 +3314,8 @@ class Top2VecSpark:
         (only the new docs are tokenized/encoded — new doc-shards,
         no existing partition rewritten; plans/build.py
         ``append_documents``). New doc_ids are remapped to start at
-        the next shard boundary.
+        the next shard boundary. The new engine's statistics are the
+        appended index's, cached in memory when this engine's were.
 
         A5: if topics are computed and ``new_embeddings`` (vec_id ==
         new doc_id pre-shift, embedding) is given, the new docs are
@@ -3307,16 +3331,8 @@ class Top2VecSpark:
             shifted = new_docs.withColumn(
                 "doc_id", (F.col("doc_id") + F.lit(id_shift)).cast("long")
             )
-            merged = self.docs.unionByName(shifted, allowMissingColumns=True)
-            out = Top2VecSpark(
-                self.spark,
-                merged,
-                min_count=self.min_count,
-                cfg=self.cfg,
-                keep_documents=self.keep_documents,
-                ascii_fast_path=self.ascii_fast_path,
-                tokenizer=self.tokenizer,
-                ngram_vocab=self.ngram_vocab,
+            out = self._like(
+                self.docs.unionByName(shifted, allowMissingColumns=True)
             )
             # appended docs must be indexed under the SAME tokenization
             # as the base build: with a custom tokenizer or a
@@ -3324,26 +3340,24 @@ class Top2VecSpark:
             # pipeline) and hand the packed tf to the append — the
             # default append path uses the built-in contract tokenizer
             # only. Phrase augmentation uses the BASE phrase vocabulary
-            # (no re-mining), matching the stored index's terms.
+            # (no re-mining), matching the stored index's terms, and
+            # the new engine keeps it for its own tokens.
             packed_tf = None
             if self.tokenizer is not None or self.ngram_vocab:
                 from top2vec_spark.operators.tokens import pack_tokens
 
-                new_toks = tokenize_docs(
-                    shifted,
-                    ascii_fast_path=self.ascii_fast_path,
-                    tokenizer=self.tokenizer,
-                )
-                if self.ngram_vocab:
-                    from top2vec_spark.operators.phrases import (
-                        tokens_with_phrases,
-                    )
-
-                    new_toks = tokens_with_phrases(new_toks, self.phrases)
-                packed_tf = pack_tokens(new_toks)
-            out._index = self._index.append_documents(
+                packed_tf = pack_tokens(self._tokenize(shifted))
+            if self.ngram_vocab:
+                out._phrases = self.phrases
+            idx = self._index.append_documents(
                 shifted, cfg=self.cfg, packed_tf=packed_tf
             )
+            # a serving index stays served from memory: the source keeps
+            # its own cache for the snapshot it still answers
+            src = self._index._postings
+            if src is not None and src.is_cached:
+                idx.cache()
+            out._index = idx
         else:
             dup = (
                 self.docs.select("doc_id")
@@ -3353,16 +3367,8 @@ class Top2VecSpark:
             )
             if dup:
                 raise ValueError("Some document ids already exist in model.")
-            merged = self.docs.unionByName(new_docs, allowMissingColumns=True)
-            out = Top2VecSpark(
-                self.spark,
-                merged,
-                min_count=self.min_count,
-                cfg=self.cfg,
-                keep_documents=self.keep_documents,
-                ascii_fast_path=self.ascii_fast_path,
-                tokenizer=self.tokenizer,
-                ngram_vocab=self.ngram_vocab,
+            out = self._like(
+                self.docs.unionByName(new_docs, allowMissingColumns=True)
             )
         if hasattr(self, "doc_topic") and new_embeddings is not None:
             from top2vec_spark.operators.similarity import assign_nearest
@@ -3416,11 +3422,12 @@ class Top2VecSpark:
         """Reference delete_documents (top2vec.py:2063-2122). With a
         built index: tombstone marking (= hnswlib mark_deleted,
         top2vec.py:2104-2110) — queries skip the docs immediately, no
-        partition rewrites; stats compact on next full rebuild (the
-        reference likewise does not retrain after deletes). The WAND
-        path is authoritative post-delete; forcing use_index=False
-        bypasses tombstones (like bypassing the reference's index).
-        Without an index: engine over the filtered corpus."""
+        partition rewrites; statistics stay the index's pre-delete ones
+        until :meth:`compact_index` (the reference likewise does not
+        retrain after deletes). The WAND path is authoritative
+        post-delete; forcing use_index=False bypasses tombstones (like
+        bypassing the reference's index). Without an index: engine
+        over the filtered corpus."""
         self._validate_doc_ids(doc_ids)
         if self._index is not None:
             self._index.delete_documents(doc_ids)
@@ -3437,17 +3444,7 @@ class Top2VecSpark:
                     self, "_doc_index_tombstones", frozenset()
                 ) | frozenset(int(d) for d in doc_ids)
             return self
-        remaining = self.docs.filter(~F.col("doc_id").isin(list(doc_ids)))
-        out = Top2VecSpark(
-            self.spark,
-            remaining,
-            min_count=self.min_count,
-            cfg=self.cfg,
-            keep_documents=self.keep_documents,
-            ascii_fast_path=self.ascii_fast_path,
-            tokenizer=self.tokenizer,
-            ngram_vocab=self.ngram_vocab,
-        )
+        out = self._like(self.docs.filter(~F.col("doc_id").isin(list(doc_ids))))
         if hasattr(self, "doc_topic"):
             out.doc_topic = self.doc_topic.filter(
                 ~F.col("doc_id").isin(list(doc_ids))
@@ -3732,10 +3729,8 @@ class Top2VecSpark:
         if not ids:
             return []
         rows = (
-            tokenize_docs(
-                self.docs.filter(F.col("doc_id").isin(list(ids))),
-                ascii_fast_path=self.ascii_fast_path,
-                tokenizer=self.tokenizer,
+            self._tokenize(
+                self.docs.filter(F.col("doc_id").isin(list(ids))), phrases=False
             )
             .select("term")
             .distinct()
