@@ -26,17 +26,87 @@ def parquet_docs(spark, tmp_path_factory):
     return spark.read.parquet(p)
 
 
-def test_projection_is_pushed_isin_not_full_scan(spark, parquet_docs):
+def test_projection_is_pushed_isin_not_full_scan(spark, parquet_docs, monkeypatch):
     """_project must fetch url/text for the <=k hits via a pushed
     doc_id IN (...) filter on the docs scan — not stream the whole
-    corpus through a join (a full-table read per query at 10^12)."""
+    corpus through a join (a full-table read per query at 10^12).
+    The returned frame is local, so the plan is the fetch's own."""
     eng = Top2VecSpark(spark, parquet_docs, ascii_fast_path=True)
+    plans = []
+    cls = type(parquet_docs)
+    orig = cls.collect
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return orig(self)
+
+    monkeypatch.setattr(cls, "collect", spy)
     res = eng.search_documents_by_keywords(["wa"], 5, return_documents=True)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [In(doc_id" in plan, plan
+    monkeypatch.undo()
+    # the one action that reads url/text from the docs scan
+    fetch = [p for p in plans if "url:string" in p]
+    assert len(fetch) == 1, plans
+    assert "PushedFilters: [In(doc_id" in fetch[0], fetch[0]
     rows = res.collect()
     assert len(rows) == 5
     assert all(r["text"] is not None for r in rows)
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    out = fn()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(set(sc.statusTracker().getJobIdsForGroup(None)) - before)
+
+
+def test_projection_job_counts(spark, parquet_docs, tmp_path):
+    """On a cached index, a keyword search that returns documents runs
+    the top-k and one fetch (two jobs), so does the same search without
+    documents on a (doc_id, url, text) corpus, and collecting the
+    returned frame runs none."""
+    eng = Top2VecSpark(spark, parquet_docs, ascii_fast_path=True)
+    eng.build_index(str(tmp_path / "jidx"), docs_per_shard=64, n_buckets=8)
+    eng._index.cache()
+    eng.search_documents_by_keywords(["wa", "wb"], 5)  # warm planning state
+    for docs in (True, False):
+        res, n = _jobs(
+            spark,
+            lambda: eng.search_documents_by_keywords(
+                ["wa", "wb"], 5, return_documents=docs
+            ),
+        )
+        assert n <= 2, (docs, n)
+        rows, n = _jobs(spark, res.collect)
+        assert n == 0 and len(rows) == 5
+        assert ("text" in res.columns) == docs and "url" in res.columns
+
+
+def test_projection_over_cap_streams_every_row(spark, parquet_docs, monkeypatch):
+    """Above _PROJECT_COLLECT_CAP hits the result streams through a join
+    with ``docs``: keyword and hybrid searches still return every row,
+    in rank order, with the right text."""
+    eng = Top2VecSpark(spark, parquet_docs, ascii_fast_path=True)
+    vecs = spark.createDataFrame(
+        [(i, [float((i * 7) % 11), float((i * 5) % 13), 1.0]) for i in range(200)],
+        "vec_id long, embedding array<float>",
+    )
+    eng.set_document_vectors(vecs)
+    text = {r["doc_id"]: r["text"] for r in parquet_docs.collect()}
+    calls = {
+        "kw": lambda: eng.search_documents_by_keywords(["wa", "wb"], 10),
+        "hybrid": lambda: eng.hybrid_search_documents(
+            ["wa", "wb"], [1.0, 2.0, 1.0], 10
+        ),
+    }
+    under = {name: [tuple(r) for r in call().collect()] for name, call in calls.items()}
+    monkeypatch.setattr(Top2VecSpark, "_PROJECT_COLLECT_CAP", 3)
+    for name, call in calls.items():
+        rows = [tuple(r) for r in call().collect()]
+        assert rows == under[name] and len(rows) == 10, name
+        assert all(r[-1] == text[r[0]] for r in rows), name
 
 
 def test_dense_id_validation_runs_driver_side(spark, parquet_docs):

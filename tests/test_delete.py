@@ -321,6 +321,14 @@ def _max_in_list(plan: str) -> int:
     return max((len(m.split(",")) for m in lists), default=0)
 
 
+def _max_limit(plan: str) -> int:
+    """Largest row limit in a plan string (a top-k is a Limit over a
+    Sort), 0 when the plan has none."""
+    import re
+
+    return max(map(int, re.findall(r"Limit (\d+)", plan)), default=0)
+
+
 def test_mass_delete_plans_anti_join_not_id_lists(spark, tmp_path, monkeypatch):
     """With 10^5 tombstones every query-language and aggregation plan
     drops deleted docs through one LeftAnti join, never an IN list of
@@ -363,12 +371,15 @@ def test_mass_delete_plans_anti_join_not_id_lists(spark, tmp_path, monkeypatch):
         "search": lambda: eng.search("+wa wb", 5),
         "significant_terms": lambda: eng.significant_terms("wa", 5),
         "phrase": lambda: eng.search_documents_by_phrase(["wa", "wb"], 5),
+        "and": lambda: eng.search_documents_by_keywords_all(["wa", "wb"], 5),
     }
     for name, call in calls.items():
         out, plans = plans_of(call)
         assert plans, name
         assert any("LeftAnti" in p for p in plans), name
         assert max(_max_in_list(p) for p in plans) <= 1000, name
+        if name in ("phrase", "and"):  # a top-k of k, not k + tombstones
+            assert max(_max_limit(p) for p in plans) <= 5, name
         if isinstance(out, DataFrame) and "doc_id" in out.columns:
             assert gone not in {r["doc_id"] for r in out.collect()}, name
 
@@ -385,3 +396,35 @@ def test_mass_delete_plans_anti_join_not_id_lists(spark, tmp_path, monkeypatch):
     assert _max_in_list(analyzed) <= 1000
     eng.compact_index()
     assert eng.docs.count() == 200 - 4
+
+
+def test_phrase_and_topk_after_delete_drop_only_the_deleted(
+    spark, tmp_path, monkeypatch
+):
+    """Phrase and AND top-k after a delete are the pre-delete top-(k+d)
+    without the d deleted docs, cut to k: the same ranks and float64
+    scores (statistics stay pre-delete), and neither search reads the
+    tombstone id set."""
+    eng, _ = _api_engine(spark, str(tmp_path / "pa"), n_docs=200, seed=57)
+    k, d = 5, 3
+    calls = {
+        "phrase": lambda n: eng.search_documents_by_phrase(
+            ["wa", "wb"], n, return_documents=False
+        ),
+        "and": lambda n: eng.search_documents_by_keywords_all(
+            ["wa", "wb"], n, return_documents=False
+        ),
+    }
+    before = {name: [tuple(r) for r in call(k + d).collect()] for name, call in calls.items()}
+    gone = {before["phrase"][0][0], before["and"][1][0], before["and"][3][0]}
+    eng.delete_documents(sorted(gone))
+    eng._doc_id_bounds()  # the bounds read tombstones once, not the searches
+
+    def no_tombstones(self):
+        raise AssertionError("search read PostingsIndex.tombstones")
+
+    monkeypatch.setattr(PostingsIndex, "tombstones", property(no_tombstones))
+    for name, call in calls.items():
+        want = [r for r in before[name] if r[0] not in gone][:k]
+        assert len(want) == k, name
+        assert [tuple(r) for r in call(k).collect()] == want, name

@@ -70,3 +70,28 @@ def test_hybrid_facade(spark):
     assert {r["n_lists"] for r in res} <= {1, 2}
     with pytest.raises(ValueError, match="has not been learned"):
         eng.hybrid_search_documents(["zzznotaword"], qvec, 5)
+
+
+def test_hybrid_facade_with_documents(spark):
+    """With documents, the hybrid result keeps its own rank order
+    (rrf_score DESC, doc_id ASC) and each row carries its document's
+    text: the projection does not sort by a ``score`` column."""
+    from top2vec_spark import Top2VecSpark
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    eng = Top2VecSpark(spark, docs, ascii_fast_path=True)
+    eng.set_document_vectors(emb.select("vec_id", "embedding"))
+    term = eng.vocab.orderBy(F.col("df").desc()).first()["term"]
+    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 7).first()["embedding"]]
+    res = eng.hybrid_search_documents([term], qvec, 10).collect()
+    assert 1 <= len(res) <= 10
+    keys = [(-r["rrf_score"], r["doc_id"]) for r in res]
+    assert keys == sorted(keys)
+    text = {
+        r["doc_id"]: r["text"]
+        for r in docs.filter(F.col("doc_id").isin([r["doc_id"] for r in res]))
+        .select("doc_id", "text")
+        .collect()
+    }
+    assert all(r["text"] == text[r["doc_id"]] for r in res)

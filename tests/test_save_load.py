@@ -120,3 +120,32 @@ def test_custom_tokenizer_contract(spark, tmp_path):
         Top2VecSpark.load(spark, str(tmp_path / "m"))
     back = Top2VecSpark.load(spark, str(tmp_path / "m"), tokenizer=tok)
     assert _rows(back.vocab, "term", "df") == _rows(eng.vocab, "term", "df")
+
+
+def test_ngram_phrases_roundtrip(spark, tmp_path):
+    """An ngram_vocab engine saves the phrases its index was built
+    with: after an append brings a new frequent bigram, the loaded
+    engine does not mine it from the saved docs, so every term of its
+    tokens is a term of its index."""
+    from top2vec_spark import Top2VecSpark
+
+    fill = [f"f{chr(97 + i // 26)}{chr(97 + i % 26)}" for i in range(600)]
+
+    def docs(lead, stride, n):
+        rows = [
+            (i, f"{lead} " + " ".join(fill[(stride * i + j) % 600] for j in range(8)))
+            for i in range(n)
+        ]
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    eng = Top2VecSpark(
+        spark, docs("machine learning", 7, 60), min_count=0,
+        ngram_vocab=True, phrase_threshold=1.0,
+    )
+    eng.build_index(str(tmp_path / "idx"), resume=False, docs_per_shard=64, n_buckets=8)
+    out = eng.add_documents(docs("deep network", 11, 30))
+    out.save(str(tmp_path / "m"))
+    back = Top2VecSpark.load(spark, str(tmp_path / "m"))
+    terms = {r["term"] for r in back.tokens.select("term").distinct().collect()}
+    assert "machine learning" in terms
+    assert terms <= set(back.vocab_map)

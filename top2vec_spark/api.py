@@ -315,22 +315,6 @@ class Top2VecSpark:
         nothing is deleted or no index is built)."""
         return df if self._index is None else self._index._live(df)
 
-    def _n_deleted(self) -> int:
-        """Tombstone count — sizes the over-fetch of the top-k
-        operators that drop deleted docs after ranking."""
-        return 0 if self._index is None else len(self._index.tombstones)
-
-    def _exclude_tombstones(self, result: DataFrame, k: int, order) -> DataFrame:
-        """Post-delete consistency for positional queries (which have
-        no WAND path): the over-fetch + exclude + re-limit contract —
-        ranks/scores keep the stale corpus stats exactly like the
-        tombstoned WAND path, deleted docs just drop out of the
-        result."""
-        out = self._live(result)
-        if out is not result:
-            out = out.orderBy(*order)
-        return out.limit(k) if k is not None else out
-
     def compact_index(self):
         """Maintenance hook: fold every streamed/appended epoch and
         all tombstones into a fresh single-epoch base
@@ -435,7 +419,7 @@ class Top2VecSpark:
             [k.lower() for k in keywords] + [k.lower() for k in keywords_neg]
         )
         result = self._topk(keywords, keywords_neg, num_docs, use_index=use_index)
-        return self._project(result, return_documents)
+        return self._project(result, num_docs, return_documents)
 
     def search_documents_by_keywords_batch(
         self, queries: dict, num_docs: int
@@ -534,7 +518,12 @@ class Top2VecSpark:
         fused = rrf_fuse(
             {"lexical": lex, "vector": vec}, num_docs, rrf_c=rrf_c
         )
-        return self._project(fused, return_documents)
+        return self._project(
+            fused,
+            num_docs,
+            return_documents,
+            order=[F.col("rrf_score").desc(), F.col("doc_id").asc()],
+        )
 
     def query_documents(
         self, query: str, num_docs: int, return_documents: bool = True
@@ -552,7 +541,7 @@ class Top2VecSpark:
             raise ValueError("no query tokens found in vocabulary")
         self._validate_num_docs(num_docs)
         result = self._topk(terms, (), num_docs)
-        return self._project(result, return_documents)
+        return self._project(result, num_docs, return_documents)
 
     # -- positional fulltext (beyond the reference: exact phrase,
     #    conjunctive AND, proximity, snippets — operators/positional.py)
@@ -634,7 +623,7 @@ class Top2VecSpark:
                 pos, neg, terms = plain
                 self._validate_keywords(terms)
                 result = self._topk(pos, neg, num_docs)
-                return self._project(result, return_documents)
+                return self._project(result, num_docs, return_documents)
         scored = self._live(
             self._query_match_scores(query, min_should_match=min_should_match)
         )
@@ -677,7 +666,7 @@ class Top2VecSpark:
         if sort is not None:
             # drop sort columns _project re-adds from the docs side
             # (url / projected text) — a duplicate column name would
-            # make the final orderBy reference ambiguous; the others
+            # make the result's columns ambiguous; the others
             # ride along in the result (ES returns the sort values —
             # they are the page cursor a client would keep)
             collide = [
@@ -692,7 +681,7 @@ class Top2VecSpark:
             ]
             if collide:
                 result = result.drop(*collide)
-        return self._project(result, return_documents, order=order)
+        return self._project(result, num_docs, return_documents, order=order)
 
     def _meta_field(self, field: str, what: str, numeric: bool = False) -> None:
         """Validate a metadata column an aggregation/collapse joins in
@@ -1059,7 +1048,7 @@ class Top2VecSpark:
             # duplicate-column ambiguity (same rule as sort-by-field);
             # otherwise the collapse key rides along in the result
             result = result.drop(field)
-        return self._project(result, return_documents)
+        return self._project(result, num_docs, return_documents)
 
     def range_agg(
         self, query: str, field: str, ranges: list
@@ -1244,6 +1233,7 @@ class Top2VecSpark:
         if not window:
             return self._project(
                 self.spark.createDataFrame([], "doc_id long, score double"),
+                num_docs,
                 return_documents,
             )
         ids = [int(r["doc_id"]) for r in window]
@@ -1270,7 +1260,7 @@ class Top2VecSpark:
             .orderBy(F.col("score").desc(), F.col("doc_id").asc())
             .limit(num_docs)
         )
-        return self._project(combined, return_documents)
+        return self._project(combined, num_docs, return_documents)
 
     def suggest(self, prefix: str, num_terms: int = 10) -> DataFrame:
         """Prefix autocomplete from the vocabulary — the classic
@@ -1303,18 +1293,17 @@ class Top2VecSpark:
         self._validate_list_arg(phrase, "phrase", "strings")
         self._validate_num_docs(num_docs)
         self._validate_keywords([t.lower() for t in phrase])
+        # deleted docs drop at the doc_stats join, after the phrase's
+        # df is fixed from the match set: survivors keep their scores
         result = phrase_topk(
             self._positional_tokens(phrase),
-            self.doc_stats,
+            self._live(self.doc_stats),
             self.globals,
             phrase,
-            num_docs + self._n_deleted(),
+            num_docs,
             vocab=self.vocab,
         )
-        result = self._exclude_tombstones(
-            result, num_docs, [F.col("score").desc(), F.col("doc_id").asc()]
-        )
-        return self._project(result, return_documents)
+        return self._project(result, num_docs, return_documents)
 
     def search_documents_by_keywords_all(
         self,
@@ -1329,19 +1318,17 @@ class Top2VecSpark:
         self._validate_list_arg(keywords, "keywords", "strings")
         self._validate_num_docs(num_docs)
         self._validate_keywords([k.lower() for k in keywords])
+        # deleted docs drop at the doc_stats join (df is the vocab's)
         result = bool_and_topk(
             self.spark,
             self._positional_tokens(keywords),
-            self.doc_stats,
+            self._live(self.doc_stats),
             self.globals,
             self.vocab,
             keywords,
-            num_docs + self._n_deleted(),
+            num_docs,
         )
-        result = self._exclude_tombstones(
-            result, num_docs, [F.col("score").desc(), F.col("doc_id").asc()]
-        )
-        return self._project(result, return_documents)
+        return self._project(result, num_docs, return_documents)
 
     def search_documents_by_proximity(
         self,
@@ -1357,13 +1344,12 @@ class Top2VecSpark:
         self._validate_num_docs(num_docs)
         self._validate_keywords([k.lower() for k in keywords])
         order = [F.col("span").asc(), F.col("doc_id").asc()]
-        result = self._exclude_tombstones(
-            min_cover_span(self._positional_tokens(keywords), keywords)
-            .orderBy(*order),
-            num_docs,
-            order,
+        result = (
+            self._live(min_cover_span(self._positional_tokens(keywords), keywords))
+            .orderBy(*order)
+            .limit(num_docs)
         )
-        return self._project(result, return_documents, order=order)
+        return self._project(result, num_docs, return_documents, order=order)
 
     def get_search_snippets(
         self, keywords: Sequence[str], width: int = 8
@@ -1377,11 +1363,7 @@ class Top2VecSpark:
         # snippets slice the FULL token stream (non-query words in the
         # window), so the source stays the raw tokens table; only the
         # tombstone exclusion applies
-        return self._exclude_tombstones(
-            best_snippet(self.tokens, keywords, width=width),
-            None,
-            [F.col("doc_id").asc()],
-        )
+        return self._live(best_snippet(self.tokens, keywords, width=width))
 
     def highlights(self, query: str, width: int = 8) -> DataFrame:
         """Best-window highlight per matching document for a
@@ -1430,7 +1412,7 @@ class Top2VecSpark:
         result = self._topk(
             pos_terms, neg_terms, k_overfetch, exclude_doc_ids=all_ids
         ).limit(num_docs)
-        return self._project(result, return_documents)
+        return self._project(result, num_docs, return_documents)
 
     def more_like_this(
         self,
@@ -1457,7 +1439,7 @@ class Top2VecSpark:
         result = self._topk(
             terms, [], num_docs + 1, exclude_doc_ids=[doc_id]
         ).limit(num_docs)
-        return self._project(result, return_documents)
+        return self._project(result, num_docs, return_documents)
 
     def count_matches(self, query: str) -> int:
         """Total-hits count for a query-language string: the size of
@@ -2082,7 +2064,9 @@ class Top2VecSpark:
         self._validate_topic_num(topic_num, reduced)
         self._validate_topic_search(topic_num, num_docs, reduced)
         res = T.search_documents_by_topic(self._dt(reduced), topic_num, num_docs)
-        return self._project(res.select("doc_id", "score"), return_documents)
+        return self._project(
+            res.select("doc_id", "score"), num_docs, return_documents
+        )
 
     def get_documents_topics(
         self,
@@ -2346,6 +2330,9 @@ class Top2VecSpark:
         tables, so save writes them as parquet under ``path``:
 
         - ``docs`` (the corpus ``tokens`` derive from)
+        - ``phrases`` of an ``ngram_vocab`` engine: the ones its
+          index's terms were built with, which mining the saved
+          ``docs`` again would not give back after an append
         - topic layer: ``doc_topic``, ``topic_centroids``,
           ``topic_embeddings`` (+ ``doc_vectors`` only when set to a
           different table)
@@ -2385,6 +2372,9 @@ class Top2VecSpark:
             "index_path": self._index and self._index.path,
         }
         self.docs.write.mode("overwrite").parquet(f"{path}/docs")
+        if self.ngram_vocab:
+            self.phrases.write.mode("overwrite").parquet(f"{path}/phrases")
+            mani["has_phrases"] = True
         if hasattr(self, "doc_topic"):
             self.doc_topic.write.mode("overwrite").parquet(
                 f"{path}/doc_topic"
@@ -2470,6 +2460,8 @@ class Top2VecSpark:
             phrase_min_count=mani["phrase_min_count"],
             phrase_threshold=mani["phrase_threshold"],
         )
+        if mani.get("has_phrases"):
+            eng._phrases = spark.read.parquet(f"{path}/phrases").cache()
         if mani["index_path"] and os.path.isdir(mani["index_path"]):
             from top2vec_spark.plans.build import PostingsIndex
 
@@ -3048,7 +3040,7 @@ class Top2VecSpark:
             res = cosine_topk(self._doc_vectors, vector, num_docs).select(
                 F.col("vec_id").alias("doc_id"), "score"
             )
-        return self._project(res, return_documents)
+        return self._project(res, num_docs, return_documents)
 
     def search_words_by_vector(
         self,
@@ -3511,21 +3503,22 @@ class Top2VecSpark:
 
     # -- helpers ------------------------------------------------------------
     def _project(
-        self, result: DataFrame, return_documents: bool, order=None
+        self, result: DataFrame, k: int, return_documents: bool, order=None
     ) -> DataFrame:
-        """Join back url/text like the reference returns
-        (documents?, doc_scores, doc_ids) — url plays the role of
-        document_ids (SURVEY.md §1.2).
+        """Attach url/text to a ranked result, as the reference returns
+        (documents?, doc_scores, doc_ids); url plays the role of
+        document_ids (SURVEY.md §1.2). ``result`` holds at most ``k``
+        rows in rank order; deleted docs are already gone from it.
 
-        O(k) join-back: the ≤k result rows are collected and the text
-        fetch is a pushed ``doc_id IN (...)`` filter on the docs scan
-        (partition/row-group pruned) — a plain broadcast join here
-        would STREAM the full corpus scan to fetch k rows, a
-        full-table read per query at 10^12 docs. Results larger than
-        _PROJECT_COLLECT_CAP fall back to the streaming join (a
-        driver-side IN literal of 10^5+ ids would stall planning)."""
-        if order is None:
-            order = [F.col("score").desc(), F.col("doc_id").asc()]
+        Up to _PROJECT_COLLECT_CAP hits: collect the ranked rows once,
+        fetch their documents with one pushed ``doc_id IN (...)``
+        filter on the docs scan (partition/row-group pruned, never a
+        full corpus read), and merge both on the driver in rank order
+        into a local frame: two jobs, and collecting the returned
+        frame runs none. Over the cap (e.g. a whole topic) a driver
+        IN list would stall planning, so ``result`` streams through a
+        join with ``docs``, ordered by ``order`` (score DESC, doc_id
+        ASC by default)."""
         cols = ["doc_id"]
         if "url" in self.docs.columns:
             cols.append("url")
@@ -3533,38 +3526,30 @@ class Top2VecSpark:
             cols.append("text")
         if len(cols) == 1:
             return result
-        # Retire the previous over-cap query's persisted frame now:
-        # unpersisting only makes a still-held result DataFrame
-        # recompute, so correctness is preserved, and a long-lived
-        # serving session holds at most ONE leaked cache entry instead
-        # of accumulating one per huge-k query.
-        for prev in self._project_persisted:
-            prev.unpersist()
-        self._project_persisted.clear()
-        # Persist before the probing collect: the over-cap fallback
-        # reuses the computed result instead of re-running the whole
-        # WAND/brute job a second time for the streaming join.
-        result = result.persist()
-        rows = result.limit(self._PROJECT_COLLECT_CAP + 1).collect()
-        if len(rows) > self._PROJECT_COLLECT_CAP:
-            # huge k (e.g. search_documents_by_topic over a whole
-            # topic): a driver-side IN list would blow up — fall back
-            # to the streaming join, which handles any k
-            self._project_persisted.append(result)
-            return result.join(self.docs.select(*cols), "doc_id").orderBy(*order)
-        result.unpersist()
-        local = self.spark.createDataFrame(rows, result.schema)
-        ids = [int(r["doc_id"]) for r in rows]
-        side = self.docs.select(*cols).filter(F.col("doc_id").isin(ids))
-        return local.join(side, "doc_id").orderBy(*order)
+        side = self.docs.select(*cols)
+        joined = result.join(side, "doc_id")
+        if k > self._PROJECT_COLLECT_CAP:
+            if order is None:
+                order = [F.col("score").desc(), F.col("doc_id").asc()]
+            return joined.orderBy(*order)
+        import pandas as pd
+
+        rows = result.collect()
+        ids = [r["doc_id"] for r in rows]
+        found = side.filter(F.col("doc_id").isin(ids)).collect() if ids else []
+        fetched = {d["doc_id"]: d for d in found}
+        # the inner join's rows and columns: doc_id, result's, docs'
+        rest = [c for c in result.columns if c != "doc_id"]
+        merged = [
+            (r["doc_id"], *(r[c] for c in rest), *(d[c] for c in cols[1:]))
+            for r in rows
+            if (d := fetched.get(r["doc_id"])) is not None
+        ]
+        schema = joined.schema
+        pdf = pd.DataFrame(merged, columns=schema.fieldNames(), dtype=object)
+        return self.spark.createDataFrame(pdf, schema)
 
     _PROJECT_COLLECT_CAP = 10_000  # max hits fetched via a driver IN list
-
-    @property
-    def _project_persisted(self) -> list:
-        if not hasattr(self, "_project_persisted_frames"):
-            self._project_persisted_frames = []
-        return self._project_persisted_frames
 
     def _validate_num(self, k: int, var_name: str = "num_docs") -> None:
         """Reference _less_than_zero (top2vec.py:1350-1353), plus an

@@ -411,47 +411,6 @@ def _query_shard_topk(
     return topk_of(cands, scores)
 
 
-def make_shard_kernel(
-    qinfo: dict[int, tuple[float, float]],
-    k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    exclude: frozenset[int],
-    stats_path: str,
-    fresh_stats: bool = True,
-    build_id: str = "",
-    tomb_path: str | None = None,
-    tomb_version: str = "",
-):
-    """Build the per-shard kernel for ONE query. qinfo: term_id ->
-    (sign, idf). ``stats_path`` is the shard-partitioned doc_stats
-    parquet dir; the kernel reads only its shard's file (dl sidecar).
-    ``exclude`` carries only QUERY-side exclusions (≤k ids);
-    tombstones come from the per-shard sidecar at ``tomb_path``.
-    """
-
-    def kernel(blocks_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                              "score": pd.Series(dtype="float64")})
-        if blocks_pdf.empty:
-            return empty
-        shard = int(blocks_pdf["shard"].iloc[0])
-        dl_lookup = _load_dl_sidecar(stats_path, build_id, shard)
-        if dl_lookup is None:
-            return empty
-        ex = _shard_exclude(exclude, tomb_path, tomb_version, shard)
-        idf_of = {tid: info[1] for tid, info in qinfo.items()}
-        terms = _build_term_structs(
-            blocks_pdf, idf_of, fresh_stats, k1, b, avgdl
-        )
-        return _query_shard_topk(
-            terms, qinfo, k, k1, b, avgdl, ex, dl_lookup
-        )
-
-    return kernel
-
-
 def make_multi_shard_kernel(
     qinfos: dict[str, dict[int, tuple[float, float]]],
     k: int,
@@ -465,8 +424,14 @@ def make_multi_shard_kernel(
     tomb_path: str | None = None,
     tomb_version: str = "",
 ):
-    """Batched-serving kernel: MANY queries against one shard in one
-    pass. Term structs and block decodes are shared across queries —
+    """The per-shard WAND kernel: every query in ``qinfos`` (query_id
+    -> term_id -> (sign, idf)) against one shard in one pass.
+    ``stats_path`` is the shard-partitioned doc_stats parquet dir; the
+    kernel reads only its shard's file (dl sidecar). ``exclude``
+    carries only QUERY-side exclusions (≤k ids); tombstones come from
+    the per-shard sidecar at ``tomb_path``.
+
+    Term structs and block decodes are shared across queries —
     a block touched by Q queries is decoded once, and the fixed
     per-query cost is amortized across the whole batch. That cost, not
     the kernel (~0.01 s), is the floor of a warm single query. On a
@@ -509,6 +474,16 @@ def make_multi_shard_kernel(
         return pd.concat(outs, ignore_index=True) if outs else empty
 
     return kernel
+
+
+def make_shard_kernel(
+    qinfo: dict[int, tuple[float, float]], k: int, *args, **kwargs
+):
+    """The per-shard kernel for ONE query (qinfo: term_id -> (sign,
+    idf)): :func:`make_multi_shard_kernel` over ``{"": qinfo}``, with
+    the same remaining arguments, emitting (doc_id, score)."""
+    kernel = make_multi_shard_kernel({"": qinfo}, k, *args, **kwargs)
+    return lambda blocks_pdf: kernel(blocks_pdf).drop(columns="query_id")
 
 
 def _plan(

@@ -219,8 +219,8 @@ class PostingsIndex:
         rebuild compacts (documented, matches the reference which
         also does not retrain after deletes).
 
-        A driver-side set for id validation and over-fetch sizing
-        only; no query plan carries its ids. Queries drop deleted docs
+        A driver-side set for doc-id validation only; no query reads
+        it and no query plan carries its ids. Queries drop deleted docs
         through :meth:`_live` (an anti-join) or, in the WAND kernels,
         by side-reading their shard's partition of the tombstone table
         (operators/wand._load_tomb_sidecar)."""
